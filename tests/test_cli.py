@@ -74,3 +74,25 @@ def test_cli_monotonic_guard_refuses_shrink(spark, tmp_path, fixture_feed, monke
     assert rc == 1
     # the original index is untouched
     assert spark.read.parquet(path).count() == 3
+
+
+def test_cli_releases_cached_frames_on_every_exit(spark, tmp_path, fixture_feed, monkeypatch):
+    from tmdb_index_spark.operators.materialize import release_pins
+
+    release_pins()  # pins other tests left on the shared ledger
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    path = str(tmp_path / "movie.parquet")
+    argv = ["--tmdb-type", "movie", "--filename", path, "--days-limit", "100000"]
+
+    before = persistent().size()
+    assert cli.main(argv) == 0  # bootstrap: sink written
+    assert persistent().size() == before
+
+    # the guard's refusal path: the real process, then rows "lost"
+    real_process = cli.process
+    monkeypatch.setattr(
+        cli, "process", lambda df, *a, **kw: real_process(df, *a, **kw).filter("id < 0")
+    )
+    before = persistent().size()
+    assert cli.main(argv) == 1
+    assert persistent().size() == before

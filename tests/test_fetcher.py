@@ -98,6 +98,11 @@ def test_fetch_json_exhaustion_raises(monkeypatch):
         feed._fetch_json("http://x", retries=3)
 
 
+def test_fetch_json_without_attempts_raises_runtime_error():
+    with pytest.raises(RuntimeError, match="retries >= 1"):
+        HttpFeed("key")._fetch_json("http://x", retries=0)
+
+
 def test_changes_rejects_pre_epoch_date():
     from datetime import date
 

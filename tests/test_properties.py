@@ -9,6 +9,8 @@ disjoint / duplicate-free id sets, null patterns), not volume.
 
 from __future__ import annotations
 
+from datetime import UTC, date, datetime
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -77,6 +79,56 @@ def test_align_is_dense_and_idempotent(spark, data):
         return
     assert [r["id"] for r in got] == list(range(max(r[0] for r in data) + 1))
     assert rows(align_id_col(aligned)) == got
+
+
+# A dense index row per id: date and retrieved_at each null or one of a
+# few days, so the stale, backfill and refresh branches all fire.
+_DAYS = [date(2024, 5, d) for d in (1, 2, 3)]
+_index_row = st.tuples(
+    st.one_of(st.none(), st.sampled_from(_DAYS)),
+    st.one_of(
+        st.none(),
+        st.sampled_from([datetime(d.year, d.month, d.day, 6, tzinfo=UTC) for d in _DAYS]),
+    ),
+)
+# An external-ids payload: 404, empty, well-formed, or unparseable ids.
+_payload = st.one_of(
+    st.none(),
+    st.just({}),
+    st.builds(lambda n: {"imdb_id": f"tt{n:07d}", "wikidata_id": f"Q{n}"},
+              st.integers(min_value=0, max_value=99)),
+    st.just({"imdb_id": "bogus", "wikidata_id": "x"}),
+)
+
+
+@given(
+    index=st.lists(_index_row, min_size=1, max_size=10),
+    payloads=st.lists(_payload, min_size=10, max_size=10),
+    backfill_limit=st.integers(min_value=0, max_value=4),
+    refresh_limit=st.integers(min_value=0, max_value=4),
+)
+@_SETTINGS
+def test_insert_external_ids_keeps_a_dense_index_dense(
+    spark, index, payloads, backfill_limit, refresh_limit
+):
+    """C5 runs without the reference's second ``align_id_col``: on a
+    dense input it must already return the same dense id set, on which
+    that align is an identity."""
+    from tmdb_index_spark.operators.upsert import validate_id
+    from tmdb_index_spark.pipeline import insert_external_ids
+    from tmdb_index_spark.sources.fetcher import FixtureFeed
+
+    df = spark.createDataFrame(
+        [(i, d, ra) for i, (d, ra) in enumerate(index)],
+        "id long, date date, retrieved_at timestamp",
+    )
+    feed = FixtureFeed(external=dict(enumerate(payloads)))
+    out = insert_external_ids(
+        df, feed, "movie", backfill_limit, refresh_limit,
+        now=datetime(2024, 5, 3, 12, tzinfo=UTC),
+    )
+    assert sorted(r[0] for r in out.select("id").collect()) == list(range(len(index)))
+    validate_id(out)
 
 
 # ---------------------------------------------------------------------------

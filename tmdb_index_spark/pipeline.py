@@ -3,7 +3,18 @@
 Composition is identical to the reference's ``process``
 (tmdb_index.py:546-568): fold latest changes → update export flag →
 enrich external ids.  Each step builds a LAZY plan; actions happen only
-at guards, worklist collection, and the sink.
+at C3's resume-date and ``align_id_col`` maxima, the C5 worklist
+collect, and the caller's guards and sink.  Two step outputs feed several of those actions, so
+``process`` pins them with the ``operators.materialize`` ledger:
+
+* the C3 upsert (made only when the feed had changes), which the C3
+  align's ``max(id)`` collect fills and its range join reads;
+* the C4 export-flagged index, which C5's three worklist branches and
+  C5's upsert all scan.
+
+Without the pins each action re-runs the upsert lineage from the
+index scan.  The caller owns the release: call ``release_pins()`` once
+the result has been written.
 
 Spark-first deviation from the reference's loop shape: the reference
 folds per-day change batches through ``update_or_append`` one day at a
@@ -21,6 +32,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tmdb_index_spark.operators.materialize import pin_frame
 from tmdb_index_spark.operators.selection import (
     select_backfill_candidates,
     select_refresh_candidates,
@@ -83,7 +95,11 @@ def insert_latest_changes(
 ) -> DataFrame:
     """C3: fetch per-day change lists, merge once, realign the dense id
     domain (reference ``insert_tmdb_latest_changes``,
-    tmdb_index.py:241-256)."""
+    tmdb_index.py:241-256).
+
+    The merged frame is pinned (registered with the ``materialize``
+    ledger) before the align: the align's ``max(id)`` collect fills the
+    pin and its range join reads it, so the upsert runs once."""
     spark = df.sparkSession
     date_range = changes_backfill_date_range(df, entity_type, today)[:days_limit]
     # The payloads are already driver-resident (sequential rate-limited
@@ -103,7 +119,7 @@ def insert_latest_changes(
     if not last:
         return align_id_col(df)
     batch = spark.createDataFrame(list(last.values()), changes_schema())
-    return align_id_col(update_or_append(df, batch))
+    return align_id_col(pin_frame(update_or_append(df, batch)))
 
 
 def update_export_flag(df: DataFrame, feed: TmdbFeed, entity_type: str) -> DataFrame:
@@ -136,8 +152,14 @@ def insert_external_ids(
     now: Any = None,
 ) -> DataFrame:
     """C5: select work (stale ∪ backfill ∪ refresh), fetch driver-side in
-    id order, upsert + realign (reference ``insert_tmdb_external_ids``,
-    tmdb_index.py:482-543)."""
+    id order, upsert (reference ``insert_tmdb_external_ids``,
+    tmdb_index.py:482-543).
+
+    Precondition: ``df`` has dense ids ``0..n-1`` (``process`` runs C3's
+    align first).  The batch ids are selected from ``df`` itself, so the
+    upsert adds no id and cannot move the max or open a hole; the
+    reference's second ``align_id_col`` here is an identity and is not
+    run."""
     from datetime import UTC, datetime
 
     has_ra = "retrieved_at" in df.columns
@@ -168,7 +190,7 @@ def insert_external_ids(
         parse_external_ids_row(feed, entity_type, i, retrieved_at) for i in ids
     ]
     batch = external_ids_batch(df.sparkSession, rows, entity_type)
-    return align_id_col(update_or_append(df, batch))
+    return update_or_append(df, batch)
 
 
 def parse_external_ids_row(
@@ -191,9 +213,16 @@ def process(
     now: Any = None,
 ) -> DataFrame:
     """C6: the full daily update (reference ``process``,
-    tmdb_index.py:546-568)."""
+    tmdb_index.py:546-568).
+
+    Pins C3's merged upsert (when the feed had changes) and C4's output
+    on the ``operators.materialize`` ledger, so each step executes once
+    instead of once per downstream action (module docstring).  The
+    caller owns the pins: call ``release_pins()`` after the last action
+    on the returned frame, as ``cli.run_lifecycle`` does after the
+    sink."""
     df = insert_latest_changes(df, feed, entity_type, days_limit, today)
-    df = update_export_flag(df, feed, entity_type)
+    df = pin_frame(update_export_flag(df, feed, entity_type))
     df = insert_external_ids(
         df, feed, entity_type, backfill_limit, refresh_limit, now=now
     )

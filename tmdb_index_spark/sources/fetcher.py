@@ -269,7 +269,8 @@ class HttpFeed:
                 exc = e
                 if attempt < retries - 1:
                     time.sleep(2.0**attempt)
-        assert exc is not None
+        if exc is None:  # retries < 1: no attempt was made
+            raise RuntimeError(f"_fetch_json needs retries >= 1, got {retries}")
         raise exc
 
     # -- feed API --------------------------------------------------------

@@ -101,7 +101,8 @@ def write_single_parquet(df: DataFrame, path: str) -> None:
             .parquet(os.path.join(tmp, "out"))
         )
         parts = glob.glob(os.path.join(tmp, "out", "part-*.parquet"))
-        assert len(parts) == 1, f"expected one part file, got {parts}"
+        if len(parts) != 1:
+            raise RuntimeError(f"expected one part file, got {parts}")
         shutil.move(parts[0], path)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

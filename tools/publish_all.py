@@ -8,9 +8,9 @@ that shape against a local data dir:
 
 * per type (movie / tv / person): load ``tmdb-<type>.parquet`` from
   ``--data-dir`` (bootstrap an empty index when absent), run the full
-  :func:`~tmdb_index_spark.pipeline.process` lifecycle, enforce the
-  monotonic-growth guard, append the GitHub-step-summary block, write
-  the index back;
+  :func:`~tmdb_index_spark.cli.run_lifecycle` (the CLI's own body:
+  :func:`~tmdb_index_spark.pipeline.process`, the monotonic-growth
+  guard, the GitHub-step-summary block, the index write-back);
 * matrix semantics: a failing type does not stop the others
   (``fail-fast: false``); the exit code reports any failure;
 * deploy: copy every produced ``tmdb-*.parquet`` into ``--site-dir``
@@ -68,50 +68,24 @@ def _fixture_feed():
 
 def run_one(spark, feed, entity_type: str, args, fixed_clock: bool) -> bool:
     """The workflow's per-type 'Update index' step. Returns success."""
-    from tmdb_index_spark.pipeline import process
-    from tmdb_index_spark.report import format_gh_step_summary
-    from tmdb_index_spark.sources.parquet import scan_or_empty, write_index
-
-    filename = os.path.join(args.data_dir, f"tmdb-{entity_type}.parquet")
-    df = scan_or_empty(spark, filename)
-    if entity_type != "tv" and "tvdb_id" in df.columns:
-        df = df.drop("tvdb_id")
-    old_count = df.count()
-    df = df.cache()
+    from tmdb_index_spark.cli import run_lifecycle
 
     clock = (
         dict(today=date(2024, 5, 3), now=datetime(2024, 5, 3, 12, tzinfo=UTC))
         if fixed_clock
         else {}
     )
-    df_new = process(
-        df,
+    return run_lifecycle(
+        spark,
         feed,
         entity_type,
+        os.path.join(args.data_dir, f"tmdb-{entity_type}.parquet"),
         days_limit=args.days_limit,
         backfill_limit=args.backfill_limit,
         refresh_limit=args.refresh_limit,
+        dry_run=args.dry_run,
         **clock,
-    ).cache()
-
-    new_count = df_new.count()
-    if new_count < old_count:
-        logger.error(
-            "[%s] index shrank: %d -> %d; refusing to write",
-            entity_type, old_count, new_count,
-        )
-        return False
-
-    summary = format_gh_step_summary(df, df_new, os.path.basename(filename))
-    print(summary)
-    gh_summary = os.environ.get("GITHUB_STEP_SUMMARY")
-    if gh_summary:
-        with open(gh_summary, "a", encoding="utf-8") as f:
-            f.write(summary)
-
-    if not args.dry_run:
-        write_index(df_new, filename)
-    return True
+    )
 
 
 def run_matrix(spark, feed, args, fixed_clock: bool, runner=run_one) -> list[str]:
