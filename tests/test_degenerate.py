@@ -626,3 +626,20 @@ def test_rolling_backtest_empty_fold_keeps_row(spark, monkeypatch):
     assert empty["n_test_days"] == 0
     assert empty["mae"] is None and empty["mean_bias"] is None
     assert empty["n_train_days"] > rows[1]["n_train_days"]
+
+
+def test_rolling_backtest_overlapping_folds_raise(spark, monkeypatch):
+    # The one conditional aggregate that scores every fold is valid
+    # only for disjoint, ordered test windows: overlapping folds must
+    # raise, also under python -O, and before any table is read.
+    import pytest
+
+    from tmdb_index_spark.queries import _embed_dedup as mod
+
+    monkeypatch.setattr(
+        mod,
+        "_BACKTEST_FOLDS",
+        (("1996-01-01", "1997-06-01"), ("1997-01-01", "1998-01-01")),
+    )
+    with pytest.raises(ValueError, match="disjoint"):
+        Q.rolling_backtest_mae(spark, "no-such-sf-dir")

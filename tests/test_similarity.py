@@ -200,7 +200,7 @@ def test_ivf_multiprobe_pandas_matches_expr(spark):
             map(tuple, ivf_topk(df, cents, k=3, nprobe=2).collect())
         )
         expr = sorted(
-            map(tuple, ivf_topk(df, cents, k=3, nprobe=2, impl="sql").collect())
+            map(tuple, ivf_topk(df, cents, k=3, nprobe=2, impl="expr").collect())
         )
         assert blas == expr and blas
 
@@ -208,6 +208,61 @@ def test_ivf_multiprobe_pandas_matches_expr(spark):
 
     with pytest.raises(ValueError, match="impl"):
         ivf_topk(_emb(spark), CENTROIDS, nprobe=2, impl="nope")
+
+
+def test_block_topk_ranking_contract_without_spark():
+    """The shared numpy rank kernel on plain arrays: exact ties on the
+    rounded sim break to the lower neighbor id, self and ``~valid``
+    entries emit nothing, a NaN sim ranks last, and ``k`` past the
+    candidate count returns every candidate — then a randomized block
+    against a per-row sorted reference."""
+    import numpy as np
+
+    from tmdb_index_spark.operators.similarity import _block_topk
+
+    def rows(*args):
+        return list(zip(*[a.tolist() for a in _block_topk(*args)]))
+
+    qids = np.array([7, 3], dtype="int64")
+    cids = np.array([9, 3, 5, 7, 1], dtype="int64")
+    sims = np.array(
+        [[0.5, 0.9, 0.5, 1.0, 0.5], [0.2, 1.0, 0.7, 0.7, np.nan]]
+    )
+    valid = np.ones(sims.shape, dtype=bool)
+    valid[1, 2] = False  # query 3 × neighbor 5
+    got = rows(qids, cids, sims, valid, 10)
+    assert got[:6] == [
+        (7, 3, 0.9, 1), (7, 1, 0.5, 2), (7, 5, 0.5, 3), (7, 9, 0.5, 4),
+        (3, 7, 0.7, 1), (3, 9, 0.2, 2),
+    ]
+    assert len(got) == 7 and got[6][:2] == (3, 1) and np.isnan(got[6][2])
+    assert rows(qids, cids, sims, valid, 2) == [
+        (7, 3, 0.9, 1), (7, 1, 0.5, 2), (3, 7, 0.7, 1), (3, 9, 0.2, 2),
+    ]
+    assert [r[1] for r in rows(qids, cids, sims, None, 10) if r[0] == 3][:2] == [
+        5, 7
+    ]
+    none = np.empty((0, 0))
+    assert rows(qids[:0], cids[:0], none, None, 3) == []
+
+    rng = np.random.RandomState(0)
+    for _ in range(50):
+        nq, nc, k = rng.randint(0, 6), rng.randint(0, 9), rng.randint(1, 6)
+        cids = rng.permutation(20)[:nc].astype("int64")
+        qids = rng.choice(np.append(cids, 99), nq).astype("int64")
+        sims = rng.choice([0.1, 0.25, 0.5], (nq, nc))
+        valid = rng.rand(nq, nc) > 0.2
+        exp = []
+        for i in range(nq):
+            cand = sorted(
+                (-sims[i, j], int(cids[j]))
+                for j in range(nc)
+                if cids[j] != qids[i] and valid[i, j]
+            )[:k]
+            exp += [
+                (int(qids[i]), c, -ns, r) for r, (ns, c) in enumerate(cand, 1)
+            ]
+        assert rows(qids, cids, sims, valid, k) == exp
 
 
 def test_ivf_assign_blas_matches_expr(spark):
@@ -246,7 +301,7 @@ def test_ivf_assign_blas_matches_expr(spark):
 def test_ivf_topk_pandas_matches_sql(spark):
     # The BLAS applyInPandas path and the column-expression path must
     # agree exactly after the shared ROUND(...,4) ranking contract.
-    a = sorted(map(tuple, ivf_topk(_emb(spark), CENTROIDS, k=2, impl="sql").collect()))
+    a = sorted(map(tuple, ivf_topk(_emb(spark), CENTROIDS, k=2, impl="expr").collect()))
     b = sorted(map(tuple, ivf_topk(_emb(spark), CENTROIDS, k=2, impl="pandas").collect()))
     assert a == b and a
 
@@ -262,7 +317,7 @@ def test_ivf_multiprobe_recovers_brute_force_when_exhaustive(spark):
 
     # single-probe is a strict subset of the candidate space: its best
     # hit can never beat multi-probe's best hit for any query.
-    sp = ivf_topk(_emb(spark), CENTROIDS, k=2, impl="sql").collect()
+    sp = ivf_topk(_emb(spark), CENTROIDS, k=2, impl="expr").collect()
     best = {}
     for r in sp:
         if r.rank == 1:
@@ -542,7 +597,6 @@ def test_two_level_exhaustive_probe_equals_flat_assignment(spark):
     # every fine cell, so it must equal flat BLAS ivf_assign exactly
     # (same distances, same lower-cell tie rule).
     from tmdb_index_spark.operators.similarity import (
-        _ivf_assign_pandas,
         fit_two_level_centroids,
         two_level_ivf_assign,
     )
@@ -551,7 +605,7 @@ def test_two_level_exhaustive_probe_equals_flat_assignment(spark):
     cc, fine, f2c = fit_two_level_centroids(emb, cells=12, coarse=3)
     flat = {
         r["vec_id"]: r["cell"]
-        for r in _ivf_assign_pandas(emb, fine, "vec_id", "embedding").collect()
+        for r in ivf_assign(emb, fine, impl="pandas").collect()
     }
     two = {
         r["vec_id"]: r["cell"]
@@ -564,7 +618,6 @@ def test_two_level_exhaustive_probe_equals_flat_assignment(spark):
 
 def test_two_level_single_probe_mostly_agrees_and_is_deterministic(spark):
     from tmdb_index_spark.operators.similarity import (
-        _ivf_assign_pandas,
         fit_two_level_centroids,
         two_level_ivf_assign,
     )
@@ -573,7 +626,7 @@ def test_two_level_single_probe_mostly_agrees_and_is_deterministic(spark):
     cc, fine, f2c = fit_two_level_centroids(emb, cells=12, coarse=3)
     flat = {
         r["vec_id"]: r["cell"]
-        for r in _ivf_assign_pandas(emb, fine, "vec_id", "embedding").collect()
+        for r in ivf_assign(emb, fine, impl="pandas").collect()
     }
     one = {
         r["vec_id"]: r["cell"]
@@ -633,36 +686,6 @@ def test_ivf2_default_cells_two_thirds_power(spark):
         S.fit_two_level_centroids = orig
     assert captured["cells"] == 100  # round(1000^(2/3))
     assert captured["coarse"] == 10  # sqrt(cells)
-
-
-def test_batched_within_group_topk_matches_per_group(spark):
-    # The batched (mapInPandas over sorted partitions) search must be
-    # bit-identical to the per-group applyInPandas form, including
-    # cells split across Arrow batch boundaries (forced with a tiny
-    # maxRecordsPerBatch).
-    from tmdb_index_spark.operators.similarity import (
-        _within_group_topk_batched,
-        _within_group_topk_pandas,
-        ivf_assign,
-    )
-
-    emb = _rand_emb(spark, n=300, d=6, seed=11)
-    cents = [(j, [float(j == i) for i in range(6)]) for j in range(5)]
-    assigned = ivf_assign(emb, cents, impl="pandas")
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    try:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "17")
-        got = sorted(
-            map(tuple, _within_group_topk_batched(
-                assigned, "cell", 3, "vec_id", "embedding").collect())
-        )
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    exp = sorted(
-        map(tuple, _within_group_topk_pandas(
-            assigned, "cell", 3, "vec_id", "embedding").collect())
-    )
-    assert got == exp and len(got) > 0
 
 
 def test_semantic_dedup_impls_identical_and_election_contract(spark):

@@ -1,40 +1,67 @@
-"""Embedding similarity search (north-star extension operators).
+"""Embedding similarity search: exact, LSH, IVF, two-level IVF and IVF-PQ.
 
-Over an ``embeddings(vec_id, embedding array<float>, label)`` table:
+Over an ``embeddings(vec_id, embedding array<float>, label)`` table,
+every ANN entry point is one point of a small design space:
 
-* :func:`cosine` — deterministic cosine expression (sequential
-  ``aggregate`` fold, so the result is bit-identical across engines and
-  partitionings — no shuffle-order float nondeterminism).
-* :func:`brute_force_topk` — exact top-k neighbors for a (small) query
-  set: broadcast queries × scan corpus, per-query ``row_number`` cut.
-  The corpus is scanned once regardless of |queries|; the shuffle is
-  |queries|·|corpus| rows wide, so this is the *baseline*, right only
-  when |queries| is small or exactness is required.
-* :func:`signbit_buckets` / :func:`lsh_topk` — random-hyperplane-style
-  LSH scale path. Buckets come from the sign bits of ``n_bits`` fixed
-  coordinates (a deterministic stand-in for random projections — same
-  plan shape, engine-reproducible). Probing compares only same-bucket
-  vectors: with b bits, candidate volume drops ~2^b×. Recall is
-  per-bucket-boundary approximate; raise ``n_bits`` for speed, lower it
-  for recall, or multi-probe (bucket ± one bit flip) for both.
+* **coarse quantizer** — the cells candidates are drawn from: none
+  (:func:`brute_force_topk`, :func:`cosine_neardup_pairs` exact),
+  sign-bit hyperplane buckets (:func:`signbit_buckets`: ``lsh_*``,
+  :func:`neardup_index_pairs`), flat k-means cells (:func:`ivf_assign`:
+  ``ivf_*``, ``ivfpq_*``, ``semantic_*``) or two-level k-means cells
+  (:func:`two_level_ivf_assign`: ``ivf2_*``);
+* **payload** — what a candidate carries into scoring: the raw vector
+  (cosine) or a PQ code word (:func:`pq_encode`: ADC cosine in
+  ``ivfpq_*``, SDC cosine in :func:`semantic_elect_codes` and
+  :func:`pq_novelty_ids`);
+* **nprobe** — the cells a query searches: its own (a per-cell
+  self-join) or its ``nprobe`` nearest (query-side multi-probe; corpus
+  membership stays single-cell, so no neighbor is scored twice).
 
-* :func:`ivf_assign` / :func:`ivf_topk` — trained-bucket ANN path:
-  centroids ride in the plan as literals, assignment is an explode +
-  ``min_by`` argmin (each distance computed once), search compares only
-  within a cell. ``lsh_topk(multi_probe=True)`` probes one-bit-flip
-  buckets for boundary recall.
+Every top-k path ranks under ONE contract: similarities rounded to 4
+decimals first (absorbing BLAS-vs-fold ULP drift), then sim
+descending, neighbor id ascending, self excluded. It lives in three
+shared kernels:
+
+* **cell assignment** — :func:`_probe_assign_pandas` (one BLAS matmul
+  per Arrow batch; ``nprobe=1`` is the home cell) and
+  :func:`_expr_assign` (exploded exact sequential-fold distances a SQL
+  oracle reproduces bit-for-bit; ``min_by`` home cell or ``row_number``
+  probes). :func:`ivf_assign`, :func:`ivf_probe_assign` and both stages
+  of :func:`ivf2_probe_assign` route through them.
+* **block ranking** — :func:`_block_topk`, one numpy kernel over a
+  (queries × candidates) similarity block. :func:`_cell_topk` runs it
+  per cell (``groupBy(cell).applyInPandas``: single-probe pandas
+  ``lsh_topk``, ``ivf_topk``, ``ivf2_index_topk``, ``ivfpq_topk``) and
+  :func:`_probe_topk` per cogrouped (probing queries × cell members)
+  block, finished by the per-query window (every ``nprobe > 1`` pandas
+  path). Raw payloads score BLAS cosine; PQ payloads score the ADC
+  lookup.
+* **expression scoring** — :func:`_side` projections joined and scored
+  by :func:`_pair_cosine`, cut by :func:`_rank_cut`'s ``row_number``:
+  the engine-portable twins :func:`brute_force_topk`, :func:`lsh_topk`,
+  :func:`ivf_topk` (``impl='expr'``) and :func:`lsh_knn_join`, and the
+  ``id_a < id_b`` pair forms of :func:`cosine_neardup_pairs` and
+  :func:`semantic_elect` (:func:`_expr_pairs`).
+
+The fitted models (k-means cells, two-level quantizer, PCA, PQ
+codebooks) all fit on one bounded deterministic sample
+(:func:`_fit_sample`), so oracle builders reproduce every fit from the
+same parquet rows.
 
 At 100 TB: brute force is a broadcast-nested-loop — fine for ad-hoc
 queries, wrong as a join. The LSH/IVF paths shuffle on the bucket/cell
-key and are skew-safe for roughly-isotropic embeddings; production
-swaps the fixed centroids for a sampled k-means fit, same plan.
+key and are skew-safe for roughly-isotropic embeddings; the
+self-tuning ``*_index_topk`` wrappers size bits or cells from N.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import math
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from tmdb_index_spark.operators.materialize import bounded_collect
 from tmdb_index_spark.operators.partitioning import (
     metadata_scan_rowcount,
     widen_small_scan,
@@ -117,6 +144,235 @@ def _as_double(col: str) -> Column:
     return F.col(col).cast("array<double>")
 
 
+def _side(
+    df: DataFrame, id_col: str, vec_col: str, id_name: str, tag: str, *keys
+) -> DataFrame:
+    """One side of an expression scorer: the id as ``id_name``, the
+    vector as ``array<double>`` and its norm as ``__{tag}v__`` /
+    ``__{tag}n__``, plus the join ``keys``. Norms are computed once
+    per vector (map stage) — computing them per PAIR doubles the
+    interpreted fold work inside the join."""
+    v = _as_double(vec_col)
+    return df.select(
+        F.col(id_col).alias(id_name),
+        v.alias(f"__{tag}v__"),
+        _norm(v).alias(f"__{tag}n__"),
+        *keys,
+    )
+
+
+def _pair_cosine(a: str, b: str) -> Column:
+    """Rounded cosine of two joined :func:`_side` projections tagged
+    ``a`` and ``b`` — the fold twin of :func:`_block_sims`."""
+    return F.round(
+        _dot(F.col(f"__{a}v__"), F.col(f"__{b}v__"))
+        / (F.col(f"__{a}n__") * F.col(f"__{b}n__")),
+        4,
+    )
+
+
+def _rank_cut(scored: DataFrame, k: int, sim_col: str = "cos_sim") -> DataFrame:
+    """Per-query top-``k`` of ``(query_id, neighbor_id, sim_col)``
+    candidate rows: ``row_number`` over (sim desc, neighbor id asc)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(sim_col).desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", sim_col, "rank")
+    )
+
+
+def _expr_topk(
+    q: DataFrame,
+    c: DataFrame,
+    k: int,
+    on: str | None = None,
+    exclude_self: bool = True,
+    dedup: bool = False,
+) -> DataFrame:
+    """The expression top-``k`` scorer: query side ``q`` (``query_id``,
+    tag ``q``) × candidate side ``c`` (``neighbor_id``, tag ``c``),
+    equi-joined on ``on`` (a cross join when None), every pair scored
+    by the fold cosine and cut by :func:`_rank_cut`. ``dedup`` drops
+    pairs found through more than one probe."""
+    joined = q.crossJoin(c) if on is None else q.join(c, on)
+    if exclude_self:
+        joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
+    scored = joined.select(
+        "query_id", "neighbor_id", _pair_cosine("q", "c").alias("cos_sim")
+    )
+    if dedup:
+        scored = scored.distinct()
+    return _rank_cut(scored, k)
+
+
+def _expr_pairs(
+    df: DataFrame, id_col: str, vec_col: str, key: str | None = None
+) -> DataFrame:
+    """``(id_a, id_b, cos_sim)`` for every ``id_a < id_b`` pair of
+    ``df`` sharing ``key`` (all pairs when None), fold-cosine scored."""
+    keys = [key] if key else []
+    a = _side(df, id_col, vec_col, "id_a", "a", *keys)
+    b = _side(df, id_col, vec_col, "id_b", "b", *keys)
+    joined = a.crossJoin(b) if key is None else a.join(b, key)
+    return joined.filter(F.col("id_a") < F.col("id_b")).select(
+        "id_a", "id_b", _pair_cosine("a", "b").alias("cos_sim")
+    )
+
+
+def _block_topk(qids, cids, sims, valid, k: int):
+    """Rank one (queries × candidates) similarity block under the
+    family contract — the one numpy ranking kernel every pandas path
+    shares. ``sims`` arrive rounded to 4 decimals; per query row the
+    candidates order by (sim desc, neighbor id asc), self
+    (``qid == cid``) and ``~valid`` entries are skipped, and at most
+    ``k`` are kept. A NaN sim (a zero-norm raw vector) ranks last.
+    Returns flat ``(query_ids, neighbor_ids, sims, ranks)`` arrays,
+    query-row major and in rank order within a row; ``valid=None``
+    keeps every non-self entry."""
+    import numpy as np
+
+    by_id = np.argsort(cids, kind="stable")
+    # stable-sorting the id-ascending columns by -sim keeps id order
+    # within equal sims
+    cols = by_id[np.argsort(-sims[:, by_id], axis=1, kind="stable")]
+    ok = qids[:, None] != cids[cols]
+    if valid is not None:
+        ok &= np.take_along_axis(valid, cols, axis=1)
+    rank = np.cumsum(ok, axis=1)
+    qi, j = np.nonzero(ok & (rank <= k))
+    nb = cols[qi, j]
+    return qids[qi], cids[nb], sims[qi, nb], rank[qi, j]
+
+
+def _block_sims(qdf, cdf, vec_col: str, codebooks):
+    """Rounded cosine block between the query rows ``qdf`` and the
+    candidate rows ``cdf`` (the same frame for a per-cell self-join)
+    and the ``valid`` mask :func:`_block_topk` takes.
+
+    Raw payload (``codebooks=None``): BLAS cosine of ``vec_col``; every
+    pair is valid, so a zero-norm vector's NaN sims rank last. PQ
+    payload (``codebooks=(CB, cb_n2)`` from :func:`_codebook_arrays`):
+    ADC cosine — exact query vector against each candidate's
+    ``codes`` reconstruction, one (m × ks) lookup table per query —
+    and a zero-norm query or reconstruction emits NO row (NaN from 0/0
+    would rank ABOVE every real candidate in Spark's and DuckDB's
+    descending order while numpy ranks it below — the pq_novelty_ids
+    divergence class; the oracles mirror with qnorm > 0 AND cnorm >
+    0)."""
+    import numpy as np
+
+    Q = np.stack(qdf[vec_col].to_numpy()).astype("float64")
+    qn = np.sqrt((Q * Q).sum(axis=1))
+    if codebooks is None:
+        C, cn = Q, qn
+        if cdf is not qdf:
+            C = np.stack(cdf[vec_col].to_numpy()).astype("float64")
+            cn = np.sqrt((C * C).sum(axis=1))
+        return np.round((Q @ C.T) / np.outer(qn, cn), 4), None
+    CB, cb_n2 = codebooks
+    m, _, sub = CB.shape
+    codes = np.stack(cdf["codes"].to_numpy()).astype("int64")  # (n, m)
+    # T[i, j, c] = q_j · cb_j[c]
+    T = np.einsum("nms,mks->nmk", Q.reshape(len(Q), m, sub), CB)
+    adot = np.zeros((len(Q), len(codes)), dtype="float64")
+    for j in range(m):
+        adot += T[:, j, :][:, codes[:, j]]
+    cn = np.sqrt(cb_n2[np.arange(m)[None, :], codes].sum(axis=1))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sims = np.round(adot / np.outer(qn, cn), 4)
+    return sims, np.outer(qn > 0, cn > 0)
+
+
+def _block_frame(qdf, cdf, k, id_col, vec_col, sim_col, codebooks, ranked):
+    """:func:`_block_sims` + :func:`_block_topk` over one block as the
+    ``(query_id, neighbor_id, sim_col[, rank])`` pandas frame."""
+    import numpy as np
+    import pandas as pd
+
+    qids = qdf[id_col].to_numpy(dtype="int64")
+    cids = cdf[id_col].to_numpy(dtype="int64")
+    if len(qids) and len(cids):
+        sims, valid = _block_sims(qdf, cdf, vec_col, codebooks)
+    else:
+        sims, valid = np.empty((len(qids), len(cids))), None
+    q, n, s, r = _block_topk(qids, cids, sims, valid, k)
+    out = {"query_id": q, "neighbor_id": n, sim_col: s}
+    if ranked:
+        out["rank"] = r
+    return pd.DataFrame(out)
+
+
+def _cell_topk(
+    assigned: DataFrame,
+    group_col: str,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    codebooks=None,
+    sim_col: str = "cos_sim",
+) -> DataFrame:
+    """Per-cell top-``k`` self-join: one ``applyInPandas`` call per
+    ``group_col`` value scores the cell's members against each other as
+    ONE block (each vector crosses the Arrow boundary once per cell,
+    not once per candidate pair) and emits ``rank``. ``codebooks``
+    selects the PQ payload (rows then carry ``codes``).
+
+    Scale note: one group = one Python call, so a skewed cell
+    serializes — keep cells balanced (k-means on a sample does) or
+    split hot cells by salting queries across copies of the cell."""
+    payload = [vec_col] if codebooks is None else [vec_col, "codes"]
+    return (
+        assigned.select(group_col, id_col, *payload)
+        .groupBy(group_col)
+        .applyInPandas(
+            lambda pdf: _block_frame(
+                pdf, pdf, k, id_col, vec_col, sim_col, codebooks, True
+            ),
+            schema=f"query_id long, neighbor_id long, {sim_col} double, rank long",
+        )
+    )
+
+
+def _probe_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    codebooks=None,
+    sim_col: str = "cos_sim",
+) -> DataFrame:
+    """Multi-probe top-``k`` as a cogrouped per-cell block pass.
+
+    ``queries`` carries each vector once per probed cell
+    (:func:`ivf_probe_assign`), ``corpus`` each vector in its single
+    home cell with its payload (raw vector, or ``codes`` when
+    ``codebooks`` is given). Cogrouping on the cell scores each
+    (queries-probing-cell × cell-members) block as ONE
+    :func:`_block_frame` and emits only each query's per-cell
+    top-``k`` — the global top-``k`` of a union is the top-``k`` of the
+    per-group top-``k``s, so a bounded window over ≤ nprobe·k candidate
+    rows per query finishes the ranking. Sims are rounded BEFORE any
+    selection, so per-cell pruning can never disagree with the
+    expression twin's global ordering."""
+    payload = [vec_col] if codebooks is None else ["codes"]
+    cand = (
+        queries.select("cell", id_col, vec_col)
+        .groupBy("cell")
+        .cogroup(corpus.select("cell", id_col, *payload).groupBy("cell"))
+        .applyInPandas(
+            lambda qdf, cdf: _block_frame(
+                qdf, cdf, k, id_col, vec_col, sim_col, codebooks, False
+            ),
+            schema=f"query_id long, neighbor_id long, {sim_col} double",
+        )
+    )
+    return _rank_cut(cand, k, sim_col)
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -128,43 +384,9 @@ def brute_force_topk(
     corpus vectors (self-matches excluded). Queries are broadcast; ties
     break on neighbor id for determinism. Returns
     ``(query_id, neighbor_id, cos_sim, rank)``."""
-    # Norms are precomputed per vector (map stage) — computing them per
-    # PAIR doubles the interpreted fold work inside the join.
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            _as_double(vec_col).alias("__qv__"),
-            _norm(_as_double(vec_col)).alias("__qn__"),
-        )
-    )
-    c = widen_small_scan(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(vec_col).alias("__cv__"),
-        _norm(_as_double(vec_col)).alias("__cn__"),
-    )
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("__qv__"), F.col("__cv__"))
-                / (F.col("__qn__") * F.col("__cn__")),
-                4,
-            ).alias("cos_sim"),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    q = F.broadcast(_side(queries, id_col, vec_col, "query_id", "q"))
+    c = _side(widen_small_scan(corpus), id_col, vec_col, "neighbor_id", "c")
+    return _expr_topk(q, c, k)
 
 
 def signbit_buckets(
@@ -213,64 +435,52 @@ def lsh_topk(
     probes by (query, neighbor).
 
     ``impl='pandas'`` scores each bucket as one BLAS matmul inside
-    ``applyInPandas`` (:func:`_within_group_topk_pandas` — the same
-    scale path :func:`ivf_topk` defaults to): each vector crosses the
-    Arrow boundary once per bucket instead of once per candidate pair,
-    and the within-bucket dot products vectorize instead of running as
+    ``applyInPandas`` (:func:`_cell_topk` — the same scale path
+    :func:`ivf_topk` defaults to): each vector crosses the Arrow
+    boundary once per bucket instead of once per candidate pair, and
+    the within-bucket dot products vectorize instead of running as
     interpreted ``aggregate`` folds. Identical output contract (sims
     rounded to 4 before ranking, neighbor-id ties). Single-probe only —
     the default stays ``'expr'`` as the engine-portable oracle twin."""
-    if impl == "pandas":
-        if multi_probe:
-            raise ValueError("impl='pandas' supports single-probe only")
-        b = signbit_buckets(widen_small_scan(corpus), n_bits, id_col, vec_col)
-        return _within_group_topk_pandas(b, "bucket", k, id_col, vec_col)
-    if impl != "expr":
+    if impl == "pandas" and multi_probe:
+        raise ValueError("impl='pandas' supports single-probe only")
+    if impl not in ("pandas", "expr"):
         raise ValueError(f"impl must be 'expr' or 'pandas', got {impl!r}")
     b = signbit_buckets(widen_small_scan(corpus), n_bits, id_col, vec_col)
-    a = b.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(vec_col).alias("__qv__"),
-        _norm(_as_double(vec_col)).alias("__qn__"),
-        "bucket",
-    )
+    if impl == "pandas":
+        return _cell_topk(b, "bucket", k, id_col, vec_col)
+    q = _side(b, id_col, vec_col, "query_id", "q", "bucket")
     if multi_probe:
-        probes = F.array(
+        q = q.withColumn("bucket", _flip_probes(n_bits))
+    c = _side(b, id_col, vec_col, "neighbor_id", "c", "bucket")
+    return _expr_topk(q, c, k, on="bucket", dedup=multi_probe)
+
+
+def _flip_probes(n_bits: int) -> Column:
+    """The ``bucket`` column exploded to itself and its ``n_bits``
+    one-bit-flip neighbors (query-side multi-probe LSH)."""
+    return F.explode(
+        F.array(
             F.col("bucket"),
             *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_bits)],
         )
-        a = a.withColumn("bucket", F.explode(probes))
-    c = b.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(vec_col).alias("__cv__"),
-        _norm(_as_double(vec_col)).alias("__cn__"),
-        "bucket",
     )
-    scored = (
-        a.join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("__qv__"), F.col("__cv__"))
-                / (F.col("__qn__") * F.col("__cn__")),
-                4,
-            ).alias("cos_sim"),
-        )
-    )
-    if multi_probe:
-        scored = scored.distinct()
-    from pyspark.sql import Window
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+
+def _signbit_bits(
+    corpus: DataFrame, n: int, target: int, vec_col: str, dim: int | None
+) -> int:
+    """The self-tuned sign-bit count ``clamp(⌈log2(max(N, 2) /
+    target)⌉, 1, dim)`` — mean bucket occupancy held at ``target``, at
+    most one hyperplane per coordinate. ``dim=None`` probes the first
+    vector with one ``head()`` job; an empty corpus (or a null first
+    vector) counts as ``dim = 1``, where no pairs exist at any bit
+    count and the caller still gets the contract-schema empty frame."""
+    bits = max(1, math.ceil(math.log2(max(n, 2) / target)))
+    if dim is None:
+        row = corpus.select(vec_col).head()
+        dim = len(row[0]) if row and row[0] is not None else 1
+    return min(bits, dim)
 
 
 #: Target mean bucket occupancy for self-tuned LSH. Within-bucket work
@@ -310,16 +520,12 @@ def lsh_index_topk(
     :func:`lsh_topk` with pinned literal bits; this wrapper is for real
     corpora where the index must track N.
     """
-    import math
-
     if n_estimate is not None and n_estimate <= 0:
         raise ValueError(f"n_estimate must be positive, got {n_estimate}")
     # the count job only runs when a decision actually needs N
     n = n_estimate
-    if n is None and (impl is None or n_bits is None):
-        n = metadata_scan_rowcount(corpus)
-        if n is None:
-            n = corpus.count()
+    if impl is None or n_bits is None:
+        n = _corpus_rowcount(corpus, n_estimate)
     if impl is None:
         # Unlike IVF (where BLAS also removes an N x cells assignment
         # cost), LSH bucketing is a free map expression, so pandas only
@@ -334,19 +540,7 @@ def lsh_index_topk(
             else "expr"
         )
     if n_bits is None:
-        n_bits = max(1, math.ceil(math.log2(max(n, 2) / target_bucket)))
-        if dim is None:
-            row = corpus.select(vec_col).head()
-            if row is None:
-                # Empty corpus: no pairs exist at any bit count; run
-                # with 1 bit so the caller still gets the empty result
-                # frame with the contract schema instead of a crash.
-                return lsh_topk(
-                    corpus, k=k, n_bits=1, id_col=id_col, vec_col=vec_col,
-                    multi_probe=multi_probe, impl=impl,
-                )
-            dim = len(row[0])
-        n_bits = min(n_bits, dim)
+        n_bits = _signbit_bits(corpus, n, target_bucket, vec_col, dim)
     return lsh_topk(
         corpus,
         k=k,
@@ -358,19 +552,68 @@ def lsh_index_topk(
     )
 
 
-def _centroid_literal(centroids):
-    """The [(cell_id, vector)] list as ONE SQL literal expression
-    (array of named_structs with D-suffix double literals — repr()
-    round-trips each double bit-exactly). Built as a single generated
-    string because the F.array(*[F.lit(x) ...]) spelling is one py4j
+def _centroid_sql(centroids) -> str:
+    """The [(cell_id, vector)] list as ONE SQL literal string (array of
+    named_structs with D-suffix double literals — repr() round-trips
+    each double bit-exactly). Built as a single generated string
+    because the F.array(*[F.lit(x) ...]) spelling is one py4j
     round-trip per element: at 45 cells x 64 dims that is ~3k calls
     and was the measured majority of ivf_topk's construction time."""
-    items = ",".join(
+    return "array(%s)" % ",".join(
         "named_struct('cell',CAST(%d AS BIGINT),'cvec',array(%s))"
         % (int(cell_id), ",".join("%rD" % float(x) for x in cvec))
         for cell_id, cvec in centroids
     )
-    return F.expr("array(%s)" % items)
+
+
+def _expr_assign(
+    df: DataFrame,
+    cells: Column,
+    id_col: str,
+    vec_col: str,
+    nprobe: int | None = None,
+) -> DataFrame:
+    """The expression cell-assign kernel: explode each vector against
+    the ``cells`` array of ``(cell, cvec)`` structs (a
+    :func:`_centroid_sql` literal, or a member list looked up per row)
+    so each squared distance is an exact sequential fold computed ONCE
+    per (vector, centroid) row, then cut. ``nprobe=None``: the home
+    cell, a ``min_by`` over a (dist, cell) struct — lexicographic
+    compare gives the deterministic lower-cell tie-break — returning
+    ``(id, vec, cell)``. Otherwise the ``nprobe`` nearest cells ranked
+    by (dist, cell) in one ``row_number`` window on the vector id,
+    returning ``(id, vec, cell, probe_rank)``.
+
+    The naive home-cell alternative — a chain of when(dist_i <
+    best_so_far) expressions — nests every prior distance inside every
+    later branch and blows the expression tree up exponentially in
+    |centroids| (measured 13s vs <2s for 8 centroids × 5k vectors)."""
+    v = _as_double(vec_col)
+    dist = df.select(
+        F.col(id_col), F.col(vec_col), F.explode(cells).alias("__c__")
+    ).select(
+        F.col(id_col),
+        F.col(vec_col),
+        F.col("__c__.cell").alias("cell"),
+        F.aggregate(
+            F.zip_with(v, F.col("__c__.cvec"), lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ).alias("__dist__"),
+    )
+    if nprobe is None:
+        return dist.groupBy(id_col).agg(
+            F.first(vec_col).alias(vec_col),
+            F.min_by(
+                F.col("cell"), F.struct(F.col("__dist__"), F.col("cell"))
+            ).alias("cell"),
+        )
+    w = Window.partitionBy(id_col).orderBy(F.asc("__dist__"), F.asc("cell"))
+    return (
+        dist.withColumn("probe_rank", F.row_number().over(w))
+        .filter(F.col("probe_rank") <= nprobe)
+        .select(id_col, vec_col, "cell", "probe_rank")
+    )
 
 
 def ivf_assign(
@@ -403,85 +646,35 @@ def ivf_assign(
     if not centroids:
         raise ValueError("ivf_assign requires at least one centroid")
     if impl == "pandas":
-        return _ivf_assign_pandas(df, centroids, id_col, vec_col)
+        return _probe_assign_pandas(df, centroids, 1, id_col, vec_col).drop(
+            "probe_rank"
+        )
     if impl != "expr":
         raise ValueError(f"impl must be 'expr' or 'pandas', got {impl!r}")
-    # Explode over the (small) centroid array so each distance is
-    # computed exactly ONCE per (vector, centroid) row, then argmin with
-    # min_by over a (dist, cell) struct — lexicographic compare gives
-    # the deterministic lower-cell tie-break. The naive alternative — a
-    # chain of when(dist_i < best_so_far) expressions — nests every
-    # prior distance inside every later branch and blows the expression
-    # tree up exponentially in |centroids| (measured 13s vs <2s for 8
-    # centroids × 5k vectors).
-    v = _as_double(vec_col)
-    cent = _centroid_literal(centroids)
-    exploded = widen_small_scan(df).select(
-        F.col(id_col), F.col(vec_col), F.explode(cent).alias("__c__")
-    ).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col("__c__.cell").alias("__cell__"),
-        F.aggregate(
-            F.zip_with(v, F.col("__c__.cvec"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("__dist__"),
+    cells = F.expr(_centroid_sql(centroids))
+    return _expr_assign(widen_small_scan(df), cells, id_col, vec_col)
+
+
+def _fit_sample(
+    df: DataFrame, id_col: str, vec_col: str, max_sample: int, what: str
+):
+    """The bounded deterministic sample every fitted model shares: the
+    first ``max_sample`` vectors by id (a stable, engine-independent
+    choice) in one driver-side collect, as an ``(n, d)`` float64 array.
+    The fit sample is capped at max_sample by the limit; the bound
+    makes the cap enforced rather than assumed. ``what`` names the fit
+    in the bound and in the empty-corpus error."""
+    import numpy as np
+
+    rows = bounded_collect(
+        df.select(id_col, vec_col).orderBy(id_col).limit(max_sample),
+        max_sample,
+        f"{what} fit sample",
     )
-    return exploded.groupBy(id_col).agg(
-        F.first(vec_col).alias(vec_col),
-        F.min_by(
-            F.col("__cell__"), F.struct(F.col("__dist__"), F.col("__cell__"))
-        ).alias("cell"),
-    )
-
-
-def _ivf_assign_pandas(
-    df: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """BLAS cell assignment: ‖x−c‖² = ‖x‖² − 2x·C + ‖c‖² as one matmul
-    per Arrow batch. Map-only; vectors cross the Arrow boundary once
-    per batch instead of once per centroid.
-
-    The centroid matrix is built in cell-id order: ``argmin`` breaks
-    exact-distance ties by matrix ROW position, while the expression
-    twin's ``min_by((dist, cell))`` breaks them by lower cell id — with
-    the rows sorted by cell id the two rules coincide, so the impls
-    stay bit-identical even on exact-tie vectors."""
-    import pandas as pd
-
-    centroids = sorted(centroids, key=lambda cv: int(cv[0]))
-    cells = [int(c) for c, _ in centroids]
-    cvecs = [[float(x) for x in v] for _, v in centroids]
-    dtypes = dict(df.dtypes)
-    out_schema = (
-        f"`{id_col}` {dtypes[id_col]}, `{vec_col}` {dtypes[vec_col]}, cell long"
-    )
-
-    def run(batches):
-        import numpy as np
-
-        Cm = np.array(cvecs, dtype="float64")  # (k, d)
-        c2 = (Cm * Cm).sum(axis=1)
-        cell_ids = np.array(cells, dtype="int64")
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.assign(cell=pd.Series([], dtype="int64"))
-                continue
-            X = np.array([list(v) for v in pdf[vec_col]], dtype="float64")
-            d2 = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ Cm.T) + c2[None, :]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    vec_col: pdf[vec_col],
-                    "cell": cell_ids[d2.argmin(axis=1)],
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(run, out_schema)
+    X = np.array([list(r[1]) for r in rows], dtype="float64")
+    if len(X) == 0:
+        raise ValueError(f"{what} needs a non-empty corpus")
+    return X
 
 
 def fit_centroids(
@@ -505,10 +698,6 @@ def fit_centroids(
     Returns the ``[(cell_id, vector)]`` list :func:`ivf_topk` takes;
     cell ids are ordered by first principal coordinate for stability.
     """
-    import numpy as np
-
-    from tmdb_index_spark.operators.materialize import bounded_collect
-
     if k > max_sample:
         raise ValueError(
             f"fit_centroids: k={k} exceeds the fit sample cap "
@@ -519,16 +708,7 @@ def fit_centroids(
             "LSH cells (signbit_buckets — semantic_dedup routes there "
             "automatically)."
         )
-    # the fit sample is capped at max_sample by the limit; the bound
-    # makes the cap enforced rather than assumed
-    rows = bounded_collect(
-        df.select(id_col, vec_col).orderBy(id_col).limit(max_sample),
-        max_sample,
-        "k-means fit sample",
-    )
-    X = np.array([list(r[1]) for r in rows], dtype="float64")
-    if len(X) == 0:
-        raise ValueError("fit_centroids needs a non-empty corpus")
+    X = _fit_sample(df, id_col, vec_col, max_sample, "fit_centroids")
     return fit_kmeans_array(X, k, iters=iters, seed=seed)
 
 
@@ -609,6 +789,12 @@ IVF_BLAS_ASSIGN_THRESHOLD = 1_000
 LSH_BLAS_SCORE_THRESHOLD = 1_000
 
 
+def _assign_impl(n: int) -> str:
+    """The cell-assign kernel for an ``n``-vector corpus: BLAS at or
+    above :data:`IVF_BLAS_ASSIGN_THRESHOLD`, the fold below it."""
+    return "pandas" if n >= IVF_BLAS_ASSIGN_THRESHOLD else "expr"
+
+
 def ivf_index_topk(
     corpus: DataFrame,
     k: int = 3,
@@ -668,7 +854,6 @@ def ivf_index_topk(
     n = _corpus_rowcount(corpus, n_estimate)
     if cells is None:
         cells = max(1, round(n ** 0.5))
-    assign_impl = "pandas" if n >= IVF_BLAS_ASSIGN_THRESHOLD else "expr"
     centroids = fit_centroids(
         corpus, cells, id_col, vec_col, max_sample=max_sample, seed=seed
     )
@@ -679,7 +864,7 @@ def ivf_index_topk(
         id_col=id_col,
         vec_col=vec_col,
         nprobe=nprobe,
-        assign_impl=assign_impl,
+        assign_impl=_assign_impl(n),
         queries=queries,
     )
 
@@ -709,10 +894,6 @@ def fit_two_level_centroids(
     fine_centroids, fine_to_coarse)``. Everything is a pure function
     of (sample, parameters, seed), so index rebuilds reproduce
     identical structure."""
-    import numpy as np
-
-    from tmdb_index_spark.operators.materialize import bounded_collect
-
     if cells > max_sample:
         raise ValueError(
             f"fit_two_level_centroids: cells={cells} exceeds the fit "
@@ -720,16 +901,7 @@ def fit_two_level_centroids(
             "cannot supply more fine centroids than sample rows; raise "
             "max_sample deliberately or use fit-free sign-bit LSH cells."
         )
-    # the fit sample is capped at max_sample by the limit; the bound
-    # makes the cap enforced rather than assumed
-    rows = bounded_collect(
-        df.select(id_col, vec_col).orderBy(id_col).limit(max_sample),
-        max_sample,
-        "k-means fit sample",
-    )
-    X = np.array([list(r[1]) for r in rows], dtype="float64")
-    if len(X) == 0:
-        raise ValueError("fit_two_level_centroids needs a non-empty corpus")
+    X = _fit_sample(df, id_col, vec_col, max_sample, "fit_two_level_centroids")
     return two_level_from_sample(X, cells, coarse, iters=iters, seed=seed)
 
 
@@ -938,8 +1110,8 @@ def ivf2_index_topk(
             # cogrouped scoring below are already pandas/BLAS
             impl="pandas",
         )
-        return _multiprobe_topk_pandas(q, assigned, k, id_col, vec_col)
-    return _within_group_topk_pandas(assigned, "cell", k, id_col, vec_col)
+        return _probe_topk(q, assigned, k, id_col, vec_col)
+    return _cell_topk(assigned, "cell", k, id_col, vec_col)
 
 
 def _ivf2_probe_pandas(
@@ -1066,7 +1238,7 @@ def ivf2_probe_assign(
     one matmul per stage per Arrow batch with in-batch stable ranking
     — same (dist, id) tie-breaks, no window shuffles, no member-map
     plan literal — with the usual assignment-ULP caveat
-    (:func:`_ivf_assign_pandas`); the home side it pairs with
+    (:func:`ivf_assign`); the home side it pairs with
     (:func:`two_level_ivf_assign`) is already BLAS.
 
     Scale shape: the fine stage explodes ONLY the probed coarse
@@ -1087,80 +1259,34 @@ def ivf2_probe_assign(
         )
     if impl != "expr":
         raise ValueError(f"impl must be 'expr' or 'pandas', got {impl!r}")
-    from pyspark.sql import Window
-
     # only populated coarse cells are probe candidates (empty ones
     # would leave a vector fine-member-less; two_level_ivf_assign rule)
     used = set(int(c) for c in fine_to_coarse.values())
-    cc = [(c, v) for c, v in coarse_centroids if int(c) in used]
-    v = _as_double(vec_col)
-    cent = _centroid_literal(cc)
-    cd = widen_small_scan(df).select(
-        F.col(id_col), F.col(vec_col), F.explode(cent).alias("__c__")
-    ).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col("__c__.cell").alias("__ccell__"),
-        F.aggregate(
-            F.zip_with(
-                v, F.col("__c__.cvec"), lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("__cdist__"),
+    probed = ivf_probe_assign(
+        df,
+        [(c, v) for c, v in coarse_centroids if int(c) in used],
+        probe_coarse,
+        id_col,
+        vec_col,
+        impl="expr",
     )
-    wq = Window.partitionBy(id_col).orderBy(
-        F.asc("__cdist__"), F.asc("__ccell__")
-    )
-    probed = (
-        cd.withColumn("__pr__", F.row_number().over(wq))
-        .filter(F.col("__pr__") <= probe_coarse)
-        .select(id_col, vec_col, "__ccell__")
-    )
-
     members: dict[int, list[tuple[int, list[float]]]] = {}
     for fid, fvec in sorted(fine_centroids, key=lambda cv: int(cv[0])):
         members.setdefault(int(fine_to_coarse[int(fid)]), []).append(
-            (int(fid), [float(x) for x in fvec])
+            (int(fid), fvec)
         )
-    # one generated map literal (the _centroid_literal idiom): the
+    # one generated map literal (the _centroid_sql idiom): the
     # F.create_map(*[F.lit...]) spelling is a py4j round-trip per
     # element — prohibitive at two-level fine-cell counts
-    entries = ",".join(
-        "CAST(%d AS BIGINT),array(%s)"
-        % (
-            ccell,
-            ",".join(
-                "named_struct('cell',CAST(%d AS BIGINT),'cvec',array(%s))"
-                % (fid, ",".join("%rD" % float(x) for x in fvec))
-                for fid, fvec in mems
-            ),
+    mem_map = F.expr(
+        "map(%s)"
+        % ",".join(
+            "CAST(%d AS BIGINT),%s" % (ccell, _centroid_sql(mems))
+            for ccell, mems in sorted(members.items())
         )
-        for ccell, mems in sorted(members.items())
     )
-    mem_map = F.expr("map(%s)" % entries)
-    fd = probed.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.explode(F.element_at(mem_map, F.col("__ccell__"))).alias("__f__"),
-    ).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col("__f__.cell").alias("cell"),
-        F.aggregate(
-            F.zip_with(
-                v, F.col("__f__.cvec"), lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("__dist__"),
-    )
-    wf = Window.partitionBy(id_col).orderBy(F.asc("__dist__"), F.asc("cell"))
-    return (
-        fd.withColumn("probe_rank", F.row_number().over(wf))
-        .filter(F.col("probe_rank") <= nprobe)
-        .select(id_col, vec_col, "cell", "probe_rank")
-    )
+    fine_cells = F.element_at(mem_map, F.col("cell"))
+    return _expr_assign(probed, fine_cells, id_col, vec_col, nprobe)
 
 
 def _probe_assign_pandas(
@@ -1170,10 +1296,16 @@ def _probe_assign_pandas(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """BLAS multi-probe assignment: one expanded-norm matmul per Arrow
-    batch, stable argsort row-wise — with the centroid matrix in
-    cell-id order a stable sort breaks exact-distance ties to the
-    lower cell, the same (dist, cell) rule as the expression twin. The
+    """The BLAS cell-assign kernel: ‖x−c‖² = ‖x‖² − 2x·C + ‖c‖² as one
+    matmul per Arrow batch; vectors cross the Arrow boundary once per
+    batch instead of once per centroid. Returns ``(id, vec, cell,
+    probe_rank)``, ``nprobe`` rows per vector.
+
+    The centroid matrix is built in cell-id order, so ``argmin``'s
+    first-minimum rule (the home cell, ``nprobe=1``) and a stable
+    argsort (the ``nprobe`` nearest) both break exact-distance ties to
+    the lower cell — the (dist, cell) rule of the expression twin, so
+    the impls stay bit-identical even on exact-tie vectors. The
     per-vector top-``nprobe`` happens inside the batch, so the window
     shuffle + row_number of the expression path disappears entirely —
     map-only at every scale."""
@@ -1209,7 +1341,10 @@ def _probe_assign_pandas(
                 continue
             X = np.array([list(v) for v in pdf[vec_col]], dtype="float64")
             d2 = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ Cm.T) + c2[None, :]
-            idx = np.argsort(d2, axis=1, kind="stable")[:, :p]
+            if p == 1:
+                idx = d2.argmin(axis=1)[:, None]
+            else:
+                idx = np.argsort(d2, axis=1, kind="stable")[:, :p]
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy().repeat(p),
@@ -1245,8 +1380,8 @@ def ivf_probe_assign(
     window shuffle (map-only), and skipping the centroid-literal plan
     parse (~0.4 s of driver build time at 45×64 measured). Same
     (dist, cell) tie-break; distances may differ from the fold by
-    float ULPs exactly as :func:`_ivf_assign_pandas` documents for the
-    home cell — use 'expr' when an external oracle must reproduce the
+    float ULPs exactly as :func:`ivf_assign` documents for the home
+    cell — use 'expr' when an external oracle must reproduce the
     probe set on adversarially tie-heavy data.
     """
     if not centroids:
@@ -1255,28 +1390,8 @@ def ivf_probe_assign(
         return _probe_assign_pandas(df, centroids, nprobe, id_col, vec_col)
     if impl != "expr":
         raise ValueError(f"impl must be 'expr' or 'pandas', got {impl!r}")
-    v = _as_double(vec_col)
-    cent = _centroid_literal(centroids)
-    from pyspark.sql import Window
-
-    exploded = widen_small_scan(df).select(
-        F.col(id_col), F.col(vec_col), F.explode(cent).alias("__c__")
-    ).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col("__c__.cell").alias("cell"),
-        F.aggregate(
-            F.zip_with(v, F.col("__c__.cvec"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("__dist__"),
-    )
-    w = Window.partitionBy(id_col).orderBy(F.asc("__dist__"), F.asc("cell"))
-    return (
-        exploded.withColumn("probe_rank", F.row_number().over(w))
-        .filter(F.col("probe_rank") <= nprobe)
-        .select(id_col, vec_col, "cell", "probe_rank")
-    )
+    cells = F.expr(_centroid_sql(centroids))
+    return _expr_assign(widen_small_scan(df), cells, id_col, vec_col, nprobe)
 
 
 def ivf_topk(
@@ -1309,7 +1424,7 @@ def ivf_topk(
     fold's |vectors|·|cells|·dim interpreted cost comes to dominate
     (measured ~¾ of query time at 64 cells × 200k vectors) and the
     BLAS assignment removes it; see :func:`ivf_assign`.
-    ``impl='sql'`` keeps the pure column-expression path (the
+    ``impl='expr'`` keeps the pure column-expression path (the
     engine-portable twin of the DuckDB oracle).
 
     ``nprobe > 1`` searches each query's ``nprobe`` nearest cells
@@ -1332,294 +1447,28 @@ def ivf_topk(
             "queries= is only supported on the multi-probe (nprobe > 1) "
             "paths — the single-probe scoring is a per-cell self-join"
         )
+    if impl not in ("pandas", "expr"):
+        raise ValueError(f"impl must be 'pandas' or 'expr', got {impl!r}")
     b = ivf_assign(corpus, centroids, id_col, vec_col, impl=assign_impl)
     qsrc = queries if queries is not None else corpus
+    if impl == "pandas":
+        if nprobe <= 1:
+            return _cell_topk(b, "cell", k, id_col, vec_col)
+        # the scoring is the BLAS cogroup, so the probe side matches:
+        # assignment ULP semantics identical to the home-cell BLAS
+        # assignment this path pairs with
+        q = ivf_probe_assign(
+            qsrc, centroids, nprobe, id_col, vec_col, impl="pandas"
+        )
+        return _probe_topk(q, b, k, id_col, vec_col)
+    a = b
     if nprobe > 1:
-        if impl not in ("pandas", "expr", "sql"):
-            raise ValueError(
-                f"impl must be 'pandas', 'expr' or 'sql', got {impl!r}"
-            )
-        if impl == "pandas":
-            # the scoring below is already the BLAS cogroup, so the
-            # probe side matches: assignment ULP semantics identical
-            # to the home-cell _ivf_assign_pandas this path pairs with
-            q = ivf_probe_assign(
-                qsrc, centroids, nprobe, id_col, vec_col, impl="pandas"
-            )
-            return _multiprobe_topk_pandas(q, b, k, id_col, vec_col)
-        a = ivf_probe_assign(qsrc, centroids, nprobe, id_col, vec_col).select(
-            F.col(id_col).alias("query_id"),
-            _as_double(vec_col).alias("__qv__"),
-            _norm(_as_double(vec_col)).alias("__qn__"),
-            "cell",
-        )
-    elif impl == "pandas":
-        return _within_group_topk_pandas(b, "cell", k, id_col, vec_col)
-    else:
-        a = b.select(
-            F.col(id_col).alias("query_id"),
-            _as_double(vec_col).alias("__qv__"),
-            _norm(_as_double(vec_col)).alias("__qn__"),
-            "cell",
-        )
-    c = b.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(vec_col).alias("__cv__"),
-        _norm(_as_double(vec_col)).alias("__cn__"),
-        "cell",
-    )
-    scored = (
-        a.join(c, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("__qv__"), F.col("__cv__"))
-                / (F.col("__qn__") * F.col("__cn__")),
-                4,
-            ).alias("cos_sim"),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
-
-
-def _within_group_topk_batched(
-    assigned: DataFrame, group_col: str, k: int, id_col: str, vec_col: str
-) -> DataFrame:
-    """Batched sibling of :func:`_within_group_topk_pandas`: cells are
-    co-located contiguously (repartition on the cell +
-    sortWithinPartitions) and ONE ``mapInPandas`` task walks each
-    partition's cells in memory; a cell split across Arrow batch
-    boundaries is carried into the next batch (batches of one
-    partition arrive in order), so the per-cell math — and therefore
-    the output — is identical to the per-group form (parity-pinned in
-    ``test_similarity.py``).
-
-    Measured honesty note (round 7): at 200k vectors × 3420 cells the
-    two forms TIE (1.48 s vs 1.51 s min-of-2 on a pinned assignment) —
-    ``applyInPandas`` already packs many groups per task, so per-group
-    overhead is one Python call, not one task, per cell. This variant
-    exists for regimes with far more, far smaller groups per partition
-    (per-call overhead eventually dominates sub-millisecond matmuls);
-    below that it is interchangeable and the per-group form stays the
-    default everywhere."""
-    import numpy as np
-    import pandas as pd
-
-    empty = pd.DataFrame(
-        {"query_id": [], "neighbor_id": [], "cos_sim": [], "rank": []}
-    ).astype(
-        {"query_id": "int64", "neighbor_id": "int64",
-         "cos_sim": "float64", "rank": "int64"}
-    )
-
-    def one_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return empty
-        ids = pdf[id_col].to_numpy(dtype="int64")
-        V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-        norms = np.sqrt((V * V).sum(axis=1))
-        sims = np.round((V @ V.T) / np.outer(norms, norms), 4)
-        np.fill_diagonal(sims, -np.inf)
-        kk = min(k, n - 1)
-        id_order = np.argsort(ids)
-        qs, nbrs, vals, ranks = [], [], [], []
-        for row in range(n):
-            cand = id_order[id_order != row]
-            order = cand[np.argsort(-sims[row, cand], kind="stable")][:kk]
-            qs.append(np.full(kk, ids[row]))
-            nbrs.append(ids[order])
-            vals.append(sims[row, order])
-            ranks.append(np.arange(1, kk + 1))
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(qs),
-                "neighbor_id": np.concatenate(nbrs),
-                "cos_sim": np.concatenate(vals),
-                "rank": np.concatenate(ranks),
-            }
-        )
-
-    def run(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            last_g = pdf[group_col].iloc[-1]
-            mask = pdf[group_col] == last_g
-            carry = pdf[mask]
-            head = pdf[~mask]
-            for _, sub in head.groupby(group_col, sort=False):
-                out = one_cell(sub)
-                if len(out):
-                    yield out
-        if carry is not None and len(carry):
-            out = one_cell(carry)
-            if len(out):
-                yield out
-
-    co = assigned.select(group_col, id_col, vec_col).repartition(
-        F.col(group_col)
-    ).sortWithinPartitions(group_col)
-    return co.mapInPandas(
-        run, "query_id long, neighbor_id long, cos_sim double, rank long"
-    )
-
-
-def _within_group_topk_pandas(
-    assigned: DataFrame, group_col: str, k: int, id_col: str, vec_col: str
-) -> DataFrame:
-    """Per-group brute-force cosine top-``k`` as one BLAS matmul per
-    group (``applyInPandas``). Emits the same (query_id, neighbor_id,
-    cos_sim, rank) contract as the SQL path: sims rounded to 4
-    decimals BEFORE ranking, ties broken on neighbor id.
-
-    Scale note: one group = one task, so a skewed cell serializes —
-    keep cells balanced (k-means on a sample does) or split hot cells
-    by salting queries across copies of the cell. For indexes with
-    thousands of tiny cells, :func:`_within_group_topk_batched` does
-    the identical math with one Python task per PARTITION instead of
-    per cell.
-    """
-    import numpy as np
-    import pandas as pd
-
-    def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "cos_sim": [], "rank": []}
-            ).astype(
-                {"query_id": "int64", "neighbor_id": "int64",
-                 "cos_sim": "float64", "rank": "int64"}
-            )
-        ids = pdf[id_col].to_numpy(dtype="int64")
-        V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-        norms = np.sqrt((V * V).sum(axis=1))
-        sims = np.round((V @ V.T) / np.outer(norms, norms), 4)
-        np.fill_diagonal(sims, -np.inf)
-        kk = min(k, n - 1)
-        # Deterministic order: sim desc, neighbor id asc. Sorting an
-        # id-ascending argsort stably by -sim preserves the id order
-        # within equal sims.
-        id_order = np.argsort(ids)
-        qs, nbrs, vals, ranks = [], [], [], []
-        for row in range(n):
-            cand = id_order[id_order != row]
-            order = cand[np.argsort(-sims[row, cand], kind="stable")][:kk]
-            qs.append(np.full(kk, ids[row]))
-            nbrs.append(ids[order])
-            vals.append(sims[row, order])
-            ranks.append(np.arange(1, kk + 1))
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(qs),
-                "neighbor_id": np.concatenate(nbrs),
-                "cos_sim": np.concatenate(vals),
-                "rank": np.concatenate(ranks),
-            }
-        )
-
-    return assigned.select(group_col, id_col, vec_col).groupBy(group_col).applyInPandas(
-        cell_topk,
-        schema="query_id long, neighbor_id long, cos_sim double, rank long",
-    )
-
-
-def _multiprobe_topk_pandas(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Multi-probe IVF scoring as a cogrouped per-cell BLAS matmul.
-
-    ``queries`` carries each vector once per probed cell
-    (:func:`ivf_probe_assign`), ``corpus`` each vector in its single
-    home cell (:func:`ivf_assign`). Cogrouping on the cell scores each
-    (queries-probing-cell × cell-members) block as ONE matmul and
-    emits only that query's per-cell top-``k`` — the global top-``k``
-    of a union is the top-``k`` of the per-group top-``k``s, so a
-    bounded window over ≤ nprobe·k candidate rows per query finishes
-    the ranking. Sims are rounded to 4 decimals BEFORE any selection
-    (the ranking contract every path shares), so per-cell pruning can
-    never disagree with the expression twin's global ordering; ties
-    break on neighbor id.
-    """
-    import numpy as np
-    import pandas as pd
-
-    empty = pd.DataFrame(
-        {"query_id": [], "neighbor_id": [], "cos_sim": []}
-    ).astype(
-        {"query_id": "int64", "neighbor_id": "int64", "cos_sim": "float64"}
-    )
-
-    def cell_candidates(qdf: pd.DataFrame, cdf: pd.DataFrame) -> pd.DataFrame:
-        if len(qdf) == 0 or len(cdf) == 0:
-            return empty
-        qids = qdf[id_col].to_numpy(dtype="int64")
-        cids = cdf[id_col].to_numpy(dtype="int64")
-        Q = np.stack(qdf[vec_col].to_numpy()).astype("float64")
-        C = np.stack(cdf[vec_col].to_numpy()).astype("float64")
-        qn = np.sqrt((Q * Q).sum(axis=1))
-        cn = np.sqrt((C * C).sum(axis=1))
-        sims = np.round((Q @ C.T) / np.outer(qn, cn), 4)
-        # deterministic (sim desc, neighbor id asc): stable-sort an
-        # id-ascending candidate order by -sim, as the flat path does
-        id_order = np.argsort(cids)
-        qs, nbrs, vals = [], [], []
-        for row in range(len(qids)):
-            cand = id_order[cids[id_order] != qids[row]]
-            if len(cand) == 0:
-                continue
-            top = cand[np.argsort(-sims[row, cand], kind="stable")][:k]
-            qs.append(np.full(len(top), qids[row]))
-            nbrs.append(cids[top])
-            vals.append(sims[row, top])
-        if not qs:
-            return empty
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(qs),
-                "neighbor_id": np.concatenate(nbrs),
-                "cos_sim": np.concatenate(vals),
-            }
-        )
-
-    cand = (
-        queries.select("cell", id_col, vec_col)
-        .groupBy("cell")
-        .cogroup(corpus.select("cell", id_col, vec_col).groupBy("cell"))
-        .applyInPandas(
-            cell_candidates,
-            schema="query_id long, neighbor_id long, cos_sim double",
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+        a = ivf_probe_assign(qsrc, centroids, nprobe, id_col, vec_col)
+    return _expr_topk(
+        _side(a, id_col, vec_col, "query_id", "q", "cell"),
+        _side(b, id_col, vec_col, "neighbor_id", "c", "cell"),
+        k,
+        on="cell",
     )
 
 
@@ -1662,55 +1511,11 @@ def cosine_neardup_pairs(
         )
     if impl not in ("pandas", "expr"):
         raise ValueError(f"impl must be 'pandas' or 'expr', got {impl!r}")
-    if n_bits is None:
-        base = corpus.select(
-            F.col(id_col),
-            _as_double(vec_col).alias("__v__"),
-            _norm(_as_double(vec_col)).alias("__n__"),
-        )
-        a = base.select(
-            F.col(id_col).alias("id_a"),
-            F.col("__v__").alias("__va__"),
-            F.col("__n__").alias("__na__"),
-        )
-        b = base.select(
-            F.col(id_col).alias("id_b"),
-            F.col("__v__").alias("__vb__"),
-            F.col("__n__").alias("__nb__"),
-        )
-        joined = a.crossJoin(b)
-    else:
-        base = signbit_buckets(corpus, n_bits, id_col, vec_col).select(
-            F.col(id_col),
-            _as_double(vec_col).alias("__v__"),
-            _norm(_as_double(vec_col)).alias("__n__"),
-            "bucket",
-        )
-        a = base.select(
-            F.col(id_col).alias("id_a"),
-            F.col("__v__").alias("__va__"),
-            F.col("__n__").alias("__na__"),
-            "bucket",
-        )
-        b = base.select(
-            F.col(id_col).alias("id_b"),
-            F.col("__v__").alias("__vb__"),
-            F.col("__n__").alias("__nb__"),
-            "bucket",
-        )
-        joined = a.join(b, "bucket")
-    return (
-        joined.filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                _dot(F.col("__va__"), F.col("__vb__"))
-                / (F.col("__na__") * F.col("__nb__")),
-                4,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
+    key = None
+    if n_bits is not None:
+        corpus, key = signbit_buckets(corpus, n_bits, id_col, vec_col), "bucket"
+    return _expr_pairs(corpus, id_col, vec_col, key).filter(
+        F.col("cos_sim") >= threshold
     )
 
 
@@ -1728,8 +1533,6 @@ def _neardup_pairs_pandas(
     fold spelling, whose ULP-level float differences the rounding
     absorbs. ``id_a < id_b`` keeps one orientation per pair and drops
     the diagonal."""
-    from tmdb_index_spark.operators.materialize import bounded_collect
-
     import numpy as np
     import pandas as pd
 
@@ -1802,16 +1605,10 @@ def neardup_index_pairs(
     Pass ``n_estimate``/``dim`` when known to skip the count()/head()
     probe jobs.
     """
-    import math
-
     if n_estimate is not None and n_estimate <= 0:
         raise ValueError(f"n_estimate must be positive, got {n_estimate}")
     n = _corpus_rowcount(corpus, n_estimate)
-    n_bits = max(1, math.ceil(math.log2(max(n, 2) / target_bucket)))
-    if dim is None:
-        row = corpus.select(vec_col).head()
-        dim = len(row[0]) if row and row[0] is not None else 1
-    n_bits = min(n_bits, dim)
+    n_bits = _signbit_bits(corpus, n, target_bucket, vec_col, dim)
     return cosine_neardup_pairs(
         corpus, threshold, id_col, vec_col, n_bits=n_bits
     )
@@ -1954,15 +1751,10 @@ def semantic_assign(
     every SemDeDup election flavor — raw-vector :func:`semantic_elect`
     and code-payload :func:`semantic_elect_codes` — shares the exact
     same assignment policy. Returns ``(id_col, vec_col, cell)``."""
-    import math
-
     if cells > max_sample:
         import warnings
 
-        if dim is None:
-            row = corpus.select(vec_col).head()
-            dim = len(row[0]) if row and row[0] is not None else 1
-        bits = max(1, min(math.ceil(math.log2(max(cells, 2))), dim))
+        bits = _signbit_bits(corpus, cells, 1, vec_col, dim)
         warnings.warn(
             f"semantic_dedup: {cells} cells exceeds the k-means fit "
             f"sample cap ({max_sample}) — switching to sign-bit LSH "
@@ -1989,9 +1781,8 @@ def semantic_assign(
     centroids = fit_centroids(
         corpus, cells, id_col, vec_col, max_sample=max_sample, seed=seed
     )
-    assign_impl = "pandas" if n >= IVF_BLAS_ASSIGN_THRESHOLD else "expr"
     return ivf_assign(
-        corpus, centroids, id_col, vec_col, impl=assign_impl
+        corpus, centroids, id_col, vec_col, impl=_assign_impl(n)
     ).select(id_col, vec_col, "cell")
 
 
@@ -2043,35 +1834,9 @@ def semantic_elect(
     if impl not in ("pandas", "expr"):
         raise ValueError(f"impl must be 'pandas' or 'expr', got {impl!r}")
     if impl == "expr":
-        base = assigned.select(
-            F.col(id_col),
-            _as_double(vec_col).alias("__v__"),
-            _norm(_as_double(vec_col)).alias("__n__"),
-            "cell",
-        )
-        a = base.select(
-            F.col(id_col).alias("id_a"),
-            F.col("__v__").alias("__va__"),
-            F.col("__n__").alias("__na__"),
-            "cell",
-        )
-        b = base.select(
-            F.col(id_col).alias("id_b"),
-            F.col("__v__").alias("__vb__"),
-            F.col("__n__").alias("__nb__"),
-            "cell",
-        )
         dropped = (
-            a.join(b, "cell")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(
-                F.round(
-                    _dot(F.col("__va__"), F.col("__vb__"))
-                    / (F.col("__na__") * F.col("__nb__")),
-                    4,
-                )
-                >= threshold
-            )
+            _expr_pairs(assigned, id_col, vec_col, "cell")
+            .filter(F.col("cos_sim") >= threshold)
             .select(F.col("id_b").alias(id_col))
             .distinct()
             .withColumn("__drop__", F.lit(True))
@@ -2160,57 +1925,22 @@ def lsh_knn_join(
     ``n_estimate``/``dim`` when known to skip the probe jobs.
     """
     if n_bits is None:
-        import math
-
         n = _corpus_rowcount(corpus, n_estimate)
-        n_bits = max(1, math.ceil(math.log2(max(n, 2) / target_bucket)))
-        if dim is None:
-            row = corpus.select(vec_col).head()
-            dim = len(row[0]) if row and row[0] is not None else 1
-        n_bits = min(n_bits, dim)
-    qb = signbit_buckets(queries, n_bits, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        _as_double(vec_col).alias("__qv__"),
-        _norm(_as_double(vec_col)).alias("__qn__"),
-        "bucket",
+        n_bits = _signbit_bits(corpus, n, target_bucket, vec_col, dim)
+    qb = _side(
+        signbit_buckets(queries, n_bits, id_col, vec_col),
+        id_col, vec_col, "query_id", "q", "bucket",
     )
     if multi_probe:
-        probes = F.array(
-            F.col("bucket"),
-            *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_bits)],
-        )
-        qb = qb.withColumn("bucket", F.explode(probes))
+        qb = qb.withColumn("bucket", _flip_probes(n_bits))
     if broadcast_queries:
         qb = F.broadcast(qb)
-    cb = signbit_buckets(widen_small_scan(corpus), n_bits, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(vec_col).alias("__cv__"),
-        _norm(_as_double(vec_col)).alias("__cn__"),
-        "bucket",
+    cb = _side(
+        signbit_buckets(widen_small_scan(corpus), n_bits, id_col, vec_col),
+        id_col, vec_col, "neighbor_id", "c", "bucket",
     )
-    scored = qb.join(cb, "bucket")
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = scored.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            _dot(F.col("__qv__"), F.col("__cv__"))
-            / (F.col("__qn__") * F.col("__cn__")),
-            4,
-        ).alias("cos_sim"),
-    )
-    if multi_probe:
-        scored = scored.distinct()
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    return _expr_topk(
+        qb, cb, k, on="bucket", exclude_self=exclude_self, dedup=multi_probe
     )
 
 
@@ -2340,18 +2070,7 @@ def fit_pca(
     a map-only column expression over the full corpus. Returns
     ``(mu, components, evr)`` as lists.
     """
-    import numpy as np
-
-    from tmdb_index_spark.operators.materialize import bounded_collect
-
-    rows = bounded_collect(
-        df.select(id_col, vec_col).orderBy(id_col).limit(max_sample),
-        max_sample,
-        "PCA fit sample",
-    )
-    X = np.array([list(r[1]) for r in rows], dtype="float64")
-    if len(X) == 0:
-        raise ValueError("fit_pca needs a non-empty corpus")
+    X = _fit_sample(df, id_col, vec_col, max_sample, "fit_pca")
     mu, comps, evr = fit_pca_array(X, n_components)
     return mu.tolist(), [c.tolist() for c in comps], evr
 
@@ -2443,7 +2162,7 @@ def pq_encode(
     """Attach the PQ code word (``codes`` array<int>, one entry per
     subspace) to every vector: per subspace one BLAS matmul against the
     broadcast codebook per Arrow batch — the expanded-norm assignment
-    of :func:`_ivf_assign_pandas` applied ``m`` times on d/m-wide
+    of :func:`_probe_assign_pandas` applied ``m`` times on d/m-wide
     slices. Map-only, no shuffle; codes are 1–2 bytes per subspace at
     real ``ks`` so the encoded corpus is ~d·4/m× smaller than raw
     float32 vectors — the memory-compression half of PQ's value."""
@@ -2503,18 +2222,7 @@ def fit_pq(
     pure function of (sample bytes, m, ks, iters, seed) and an external
     oracle builder reproduces the exact codebooks from the same parquet
     sample."""
-    import numpy as np
-
-    from tmdb_index_spark.operators.materialize import bounded_collect
-
-    rows = bounded_collect(
-        df.select(id_col, vec_col).orderBy(id_col).limit(max_sample),
-        max_sample,
-        "PQ codebook fit sample",
-    )
-    X = np.array([list(r[1]) for r in rows], dtype="float64")
-    if len(X) == 0:
-        raise ValueError("fit_pq needs a non-empty corpus")
+    X = _fit_sample(df, id_col, vec_col, max_sample, "fit_pq")
     return fit_pq_array(X, m=m, ks=ks, iters=iters, seed=seed)
 
 
@@ -2633,104 +2341,6 @@ def semantic_dedup_pq(
     )
 
 
-def _multiprobe_adc_topk_pandas(
-    queries: DataFrame,
-    coded: DataFrame,
-    k: int,
-    CB,
-    cb_n2,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Multi-probe ADC scoring as a cogrouped per-cell lookup-table
-    pass — :func:`_multiprobe_topk_pandas`'s shape with
-    :func:`ivfpq_topk`'s code-word candidates: ``queries`` carries
-    each vector once per probed cell (:func:`ivf_probe_assign`, exact
-    vectors), ``coded`` each vector's PQ code word in its single home
-    cell.  Per cell: one (m × ks) lookup table per probing query, code
-    lookups for the cell's members, per-cell top-``k`` emitted; the
-    global top-``k`` finishes over ≤ nprobe·k rows per query.  Sims
-    rounded to 4 decimals BEFORE selection, ties on lower neighbor id
-    (the family contract)."""
-    import numpy as np
-    import pandas as pd
-
-    m, ks, sub = CB.shape
-    empty = pd.DataFrame(
-        {"query_id": [], "neighbor_id": [], "adc_sim": []}
-    ).astype(
-        {"query_id": "int64", "neighbor_id": "int64", "adc_sim": "float64"}
-    )
-
-    def cell_adc(qdf: pd.DataFrame, cdf: pd.DataFrame) -> pd.DataFrame:
-        if len(qdf) == 0 or len(cdf) == 0:
-            return empty
-        qids = qdf[id_col].to_numpy(dtype="int64")
-        cids = cdf[id_col].to_numpy(dtype="int64")
-        Q = np.stack(
-            [np.asarray(v, dtype="float64") for v in qdf[vec_col]]
-        )
-        C = np.stack(
-            [np.asarray(c, dtype="int64") for c in cdf["codes"]]
-        )
-        T = np.einsum("nms,mks->nmk", Q.reshape(len(qdf), m, sub), CB)
-        adot = np.zeros((len(qdf), len(cdf)), dtype="float64")
-        for j in range(m):
-            adot += T[:, j, :][:, C[:, j]]
-        cnorm = np.sqrt(cb_n2[np.arange(m)[None, :], C].sum(axis=1))
-        qnorm = np.sqrt((Q * Q).sum(axis=1))
-        # a zero-norm query or reconstruction has no defined cosine:
-        # the pair emits NO row (NaN from 0/0 would rank ABOVE every
-        # real candidate in Spark's and DuckDB's descending order while
-        # numpy's per-cell argsort ranks it below — the pq_novelty_ids
-        # divergence class, round-13 ADVICE). Oracle mirrors with
-        # qnorm > 0 AND cnorm > 0.
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = np.round(adot / np.outer(qnorm, cnorm), 4)
-        valid = np.outer(qnorm > 0, cnorm > 0)
-        id_order = np.argsort(cids)
-        qs, nbrs, vals = [], [], []
-        for row in range(len(qids)):
-            cand = id_order[
-                (cids[id_order] != qids[row]) & valid[row, id_order]
-            ]
-            if len(cand) == 0:
-                continue
-            top = cand[np.argsort(-sims[row, cand], kind="stable")][:k]
-            qs.append(np.full(len(top), qids[row]))
-            nbrs.append(cids[top])
-            vals.append(sims[row, top])
-        if not qs:
-            return empty
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(qs),
-                "neighbor_id": np.concatenate(nbrs),
-                "adc_sim": np.concatenate(vals),
-            }
-        )
-
-    cand = (
-        queries.select("cell", id_col, vec_col)
-        .groupBy("cell")
-        .cogroup(coded.select("cell", id_col, "codes").groupBy("cell"))
-        .applyInPandas(
-            cell_adc,
-            schema="query_id long, neighbor_id long, adc_sim double",
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_sim", "rank")
-    )
-
-
 def ivfpq_topk(
     corpus: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -2769,10 +2379,7 @@ def ivfpq_topk(
     the flat multi-probe oracle mirrors, distances ULP-equivalent to
     the fold like the home-cell assignment above) while candidate
     code words stay in their one home cell; scoring runs the
-    cogrouped ADC pass (:func:`_multiprobe_adc_topk_pandas`)."""
-    import numpy as np
-    import pandas as pd
-
+    cogrouped ADC pass (:func:`_probe_topk` with the PQ payload)."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if queries is not None and nprobe <= 1:
@@ -2780,81 +2387,18 @@ def ivfpq_topk(
             "queries= is only supported on the multi-probe (nprobe > 1) "
             "path — the single-probe ADC scoring is a per-cell self-join"
         )
-    CB, cb_n2 = _codebook_arrays(codebooks)
-    m, ks, sub = CB.shape
+    books = _codebook_arrays(codebooks)
     assigned = ivf_assign(corpus, centroids, id_col, vec_col, impl=assign_impl)
     coded = pq_encode(assigned, codebooks, id_col, vec_col)
     if nprobe > 1:
-        # BLAS probe side (the ADC scoring below is already pandas);
-        # same ULP class as the home-cell assignment above
+        # BLAS probe side (the ADC scoring is already pandas); same
+        # ULP class as the home-cell assignment above
         q = ivf_probe_assign(
             queries if queries is not None else corpus,
             centroids, nprobe, id_col, vec_col, impl="pandas",
         )
-        return _multiprobe_adc_topk_pandas(
-            q, coded, k, CB, cb_n2, id_col, vec_col
-        )
-
-    empty = pd.DataFrame(
-        {"query_id": [], "neighbor_id": [], "adc_sim": [], "rank": []}
-    ).astype(
-        {"query_id": "int64", "neighbor_id": "int64",
-         "adc_sim": "float64", "rank": "int64"}
-    )
-
-    def cell_adc_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return empty
-        ids = pdf[id_col].to_numpy(dtype="int64")
-        V = np.stack(
-            [np.asarray(v, dtype="float64") for v in pdf[vec_col]]
-        )
-        C = np.stack(
-            [np.asarray(c, dtype="int64") for c in pdf["codes"]]
-        )  # (n, m)
-        Qr = V.reshape(n, m, sub)
-        # one (m, ks) lookup table per query row: T[i, j, c] = q_j · cb_j[c]
-        T = np.einsum("nms,mks->nmk", Qr, CB)
-        adot = np.zeros((n, n), dtype="float64")
-        for j in range(m):
-            adot += T[:, j, :][:, C[:, j]]
-        cnorm = np.sqrt(cb_n2[np.arange(m)[None, :], C].sum(axis=1))
-        qnorm = np.sqrt((V * V).sum(axis=1))
-        # zero-norm guard: same no-row contract as the multi-probe
-        # path (see _multiprobe_adc_topk_pandas) — 0/0 NaN would sort
-        # ABOVE real candidates in the engines' descending order
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = np.round(adot / np.outer(qnorm, cnorm), 4)
-        valid = np.outer(qnorm > 0, cnorm > 0)
-        np.fill_diagonal(valid, False)
-        kk = min(k, n - 1)
-        id_order = np.argsort(ids)
-        qs, nbrs, vals, ranks = [], [], [], []
-        for row in range(n):
-            cand = id_order[valid[row, id_order]]
-            if len(cand) == 0:
-                continue
-            order = cand[np.argsort(-sims[row, cand], kind="stable")][:kk]
-            qs.append(np.full(len(order), ids[row]))
-            nbrs.append(ids[order])
-            vals.append(sims[row, order])
-            ranks.append(np.arange(1, len(order) + 1))
-        if not qs:
-            return empty
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(qs),
-                "neighbor_id": np.concatenate(nbrs),
-                "adc_sim": np.concatenate(vals),
-                "rank": np.concatenate(ranks),
-            }
-        )
-
-    return coded.groupBy("cell").applyInPandas(
-        cell_adc_topk,
-        schema="query_id long, neighbor_id long, adc_sim double, rank long",
-    )
+        return _probe_topk(q, coded, k, id_col, vec_col, books, "adc_sim")
+    return _cell_topk(coded, "cell", k, id_col, vec_col, books, "adc_sim")
 
 
 def ivfpq_index_topk(
@@ -2877,27 +2421,15 @@ def ivfpq_index_topk(
     driver-side collect, never the corpus). The production entry
     point; catalog oracles reproduce the identical fits from the same
     parquet sample via the fitted-literal pattern."""
-    import numpy as np
-
-    from tmdb_index_spark.operators.materialize import bounded_collect
-
     n = _corpus_rowcount(corpus, n_estimate)
     if cells is None:
         cells = max(1, round(n ** 0.5))
-    rows = bounded_collect(
-        corpus.select(id_col, vec_col).orderBy(id_col).limit(max_sample),
-        max_sample,
-        "IVF-PQ fit sample",
-    )
-    X = np.array([list(r[1]) for r in rows], dtype="float64")
-    if len(X) == 0:
-        raise ValueError("ivfpq_index_topk needs a non-empty corpus")
+    X = _fit_sample(corpus, id_col, vec_col, max_sample, "ivfpq_index_topk")
     centroids = fit_kmeans_array(X, cells, seed=seed)
     codebooks = fit_pq_array(X, m=m, ks=ks, seed=seed)
-    assign_impl = "pandas" if n >= IVF_BLAS_ASSIGN_THRESHOLD else "expr"
     return ivfpq_topk(
         corpus, centroids, codebooks, k=k,
-        id_col=id_col, vec_col=vec_col, assign_impl=assign_impl,
+        id_col=id_col, vec_col=vec_col, assign_impl=_assign_impl(n),
         nprobe=nprobe, queries=queries,
     )
 
@@ -2942,8 +2474,6 @@ def mmr_rerank(
     this form is the pool job + ~1 s. Output: (rank, id, relevance,
     mmr_score), first pick's score = λ·rel. Fewer than ``k`` pool
     rows yield fewer rows."""
-    from tmdb_index_spark.operators.materialize import bounded_collect
-
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if not 0.0 < lam <= 1.0:
@@ -3112,7 +2642,7 @@ def pq_novelty_ids(
     # one generated SQL string per table, NOT F.array(*[F.lit(x) ...]):
     # the latter is one py4j round-trip per element — m·ks² = 2048
     # doubles at (8, 16) was the measured majority of this builder's
-    # driver time (the _centroid_literal lesson; %rD round-trips each
+    # driver time (the _centroid_sql lesson; %rD round-trips each
     # double bit-exactly, so plan literals are unchanged)
     d_lits = [
         F.expr(

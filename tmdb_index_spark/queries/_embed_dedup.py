@@ -2770,11 +2770,21 @@ def rolling_backtest_mae(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal predictions, the micro-quantization rounds, the error
     sums and the final divisions/roundings — stays IN Spark, now as
     ONE conditional aggregate over the same pinned rollup (fold test
-    windows are disjoint by construction, asserted below), left-joined
+    windows are disjoint by construction, checked first), left-joined
     back to the literal fold spine so empty test windows keep their
     ``n_test_days = 0`` / NULL-MAE rows."""
     from tmdb_index_spark.operators.materialize import bounded_collect
 
+    # disjoint, ordered test windows are what lets ONE conditional
+    # aggregate replace the per-fold filters below
+    if any(
+        _BACKTEST_FOLDS[i][1] > _BACKTEST_FOLDS[i + 1][0]
+        for i in range(len(_BACKTEST_FOLDS) - 1)
+    ):
+        raise ValueError(
+            "rolling_backtest_mae: fold test windows must be disjoint "
+            f"and ordered, got {_BACKTEST_FOLDS}"
+        )
     li = _t(spark, sf_dir, "lineitem")
     daily = (
         li.groupBy(F.date_trunc("day", F.col("l_shipdate")).alias("__day__"))
@@ -2794,12 +2804,6 @@ def rolling_backtest_mae(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tmdb_index_spark.operators.materialize import pin_frame
 
     daily = pin_frame(daily)  # every fold filters the same rollup
-    # disjoint, ordered test windows are what lets ONE conditional
-    # aggregate replace the per-fold filters below
-    assert all(
-        _BACKTEST_FOLDS[i][1] <= _BACKTEST_FOLDS[i + 1][0]
-        for i in range(len(_BACKTEST_FOLDS) - 1)
-    )
     cal = bounded_collect(
         daily.select(
             F.date_format("__day__", "yyyy-MM-dd").alias("__d__"),

@@ -1,5 +1,6 @@
 """Local driver-mimic: run every catalog query on Spark AND its DuckDB
 oracle, compare row count, column names, and order-insensitive values.
+A query without an oracle fails, naming the dynamic builder's error.
 
 Usage: PYTHONPATH=/root/repo python tools/check_oracle.py [sf_dir] [names...]
 """
@@ -32,7 +33,12 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    from tmdb_index_spark.queries import ORACLES, QUERIES, dynamic_oracles
+    from tmdb_index_spark.queries import (
+        DYNAMIC_ORACLE_BUILDERS,
+        ORACLES,
+        QUERIES,
+        dynamic_oracles,
+    )
     from tmdb_index_spark.session import get_spark
 
     ORACLES = {**dict(ORACLES), **dynamic_oracles(sf_dir)}
@@ -59,7 +65,20 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {str(e)[:300]}")
             continue
         if name not in ORACLES:
-            print(f"ok?  {name}: no oracle (rows={len(got)})")
+            # every query must carry an oracle: dynamic_oracles() skips a
+            # builder that raises, so re-run it here to show why
+            why = "no oracle"
+            if name in DYNAMIC_ORACLE_BUILDERS:
+                try:
+                    DYNAMIC_ORACLE_BUILDERS[name](sf_dir)
+                    why = "dynamic oracle builder returned no SQL"
+                except Exception as e:  # noqa: BLE001
+                    why = (
+                        "dynamic oracle builder raised "
+                        f"{type(e).__name__}: {str(e)[:300]}"
+                    )
+            failures.append(name)
+            print(f"FAIL {name}: {why} (rows={len(got)})")
             continue
         try:
             exp = con.sql(ORACLES[name]).df()
