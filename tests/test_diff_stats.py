@@ -39,6 +39,20 @@ def test_change_summary_added_and_updated(spark):
     assert change_summary(old, new) == (1, 0, 1)
 
 
+def test_change_summary_schema_change_counts_every_common_row(spark):
+    # Different column lists differ in every common row (the reference
+    # hashes rows of different widths). xxhash64 skips nulls, so a row
+    # hash alone would call rows equal when the added column is all-null.
+    old = spark.createDataFrame([(0, False), (1, True)], "id long, adult boolean")
+    for tvdb_id in (None, 7):
+        new = spark.createDataFrame(
+            [(0, False, tvdb_id), (1, True, tvdb_id), (2, False, tvdb_id)],
+            "id long, adult boolean, tvdb_id long",
+        )
+        assert change_summary(old, new) == (1, 0, 2)
+        assert change_summary(new, old) == (0, 1, 2)
+
+
 def _stats_by_name(df_stats):
     return {r["name"]: r for r in rows(df_stats, order_by=None)}
 

@@ -3,51 +3,50 @@
 The reference diffs positionally — ``df[:min_len].hash_rows() !=
 other[:min_len].hash_rows()`` (tmdb_index.py:117-132) — which is valid
 only because row position == id (the dense-key invariant).  Here the
-same comparison is keyed: join old and new on ``id`` for ids below the
-common length and compare per-side row hashes.
+same comparison is keyed: ids below the common length that are on both
+sides, compared by per-side row hash.
 
 ``xxhash64`` values differ from Polars' ``hash_rows`` — only the
 EQUALITY STRUCTURE matters (equal rows hash equal), which both satisfy.
-If the two frames have different column sets, every joined row hashes
-different — same outcome as the reference (hash over different widths).
+``xxhash64`` skips nulls, so hashing rows of different widths would
+call a row unchanged when the only extra column is null.  When the two
+column lists differ, every common row therefore counts as updated
+without hashing — the reference's outcome (hash over different widths).
 
-Scale notes: one shuffle on ``id`` for the join (or zero if both sides
-are bucketed by id); the hash is computed map-side inside codegen.
+Execution shape: the counts come from the shared two-pass kernel
+(:mod:`tmdb_index_spark.operators.stats`): the row count of the new
+frame from its one aggregate, the updated count from its one id-keyed
+join (a broadcast when one side is small, else one shuffle on ``id``,
+or none if both sides are bucketed by id; the hash is computed
+map-side inside codegen).  The run
+report passes the kernel's result in, so its ``change_summary`` runs no
+Spark action.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from tmdb_index_spark.operators.stats import RunProfile, _profile
 
 __all__ = ["change_summary", "change_summary_df"]
 
 
-def change_summary(df_old: DataFrame, df_new: DataFrame) -> tuple[int, int, int]:
+def change_summary(
+    df_old: DataFrame, df_new: DataFrame, *, profile: RunProfile | None = None
+) -> tuple[int, int, int]:
     """(added, removed, updated) between two dense-id frames (reference
     ``change_summary``, tmdb_index.py:117-132).
 
     added/removed are length deltas (the dense invariant means growth is
     append-only); updated counts common-id rows whose row hash changed.
+    ``profile``: the frame pair's :class:`RunProfile` when the caller
+    already made it (the run report); else it is made here.
     """
-    old_len = df_old.count()
-    new_len = df_new.count()
-    added = max(0, new_len - old_len)
-    removed = max(0, old_len - new_len)
-    min_len = min(old_len, new_len)
-
-    old_h = df_old.filter(F.col("id") < min_len).select(
-        "id", F.xxhash64(*df_old.columns).alias("__h_old__")
-    )
-    new_h = df_new.filter(F.col("id") < min_len).select(
-        "id", F.xxhash64(*df_new.columns).alias("__h_new__")
-    )
-    updated = (
-        old_h.join(new_h, on="id", how="inner")
-        .filter(F.col("__h_old__") != F.col("__h_new__"))
-        .count()
-    )
-    return added, removed, updated
+    p = profile if profile is not None else _profile(df_old, df_new)
+    added = max(0, p.new_count - p.old_count)
+    removed = max(0, p.old_count - p.new_count)
+    return added, removed, p.rows_updated
 
 
 def change_summary_df(df_old: DataFrame, df_new: DataFrame) -> DataFrame:

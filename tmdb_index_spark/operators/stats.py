@@ -1,17 +1,33 @@
-"""Per-column profiling (SURVEY.md §2.6 C8, §2.4 A3-A6).
+"""Per-column profiling and the run report's two passes (SURVEY.md
+§2.6 C7-C8, §2.4 A3-A6).
 
 Reference ``compute_stats`` (tmdb_index.py:142-175) profiles every
 column of the new frame — null count, true/false counts for booleans,
 exact uniqueness of non-null values, and an updated-count against the
 old frame — and renders a small all-string stats table.
 
-Execution shape: ONE multi-aggregate pass over the new frame computes
-every per-column statistic simultaneously (Catalyst fuses them into a
-single scan + partial/final aggregate — no per-column scans), plus one
-id-keyed full-outer-join pass against the old frame for updated counts.
-The reference's positional null-padding (``_series_pad``,
-tmdb_index.py:135-139) is the full outer join here: ids past the
-shorter frame's length naturally pair with nulls.
+Execution shape: one kernel, :func:`_profile`, makes the numbers behind
+:func:`compute_stats`, :func:`~tmdb_index_spark.operators.diff.change_summary`
+and the run report, in exactly two passes:
+
+1. ONE aggregate over the new frame: every per-column stat, the row
+   count, ``min``/``max`` of ``id`` (with its null and distinct counts,
+   the dense-key invariants) and the byte lengths of string and binary
+   columns (the report's ``rss``).  Catalyst fuses them into a single
+   scan + partial/final aggregate; the exact distinct counts share one
+   Expand.
+2. ONE id-keyed join of old and new, aggregated once: the per-column
+   ``updated`` counts and ``change_summary``'s row-hash ``updated``
+   count.  Skipped when either frame is empty, where nothing can be
+   updated.
+
+The run report makes one :class:`RunProfile` and hands it to
+``compute_stats`` and ``change_summary``, which then only render it.
+The reference pads the shorter frame with nulls (``_series_pad``,
+tmdb_index.py:135-139) before comparing; a padded row never counts
+under null-propagating ``!=``, so the join is an inner join on ``id``
+— the same counts, and a side under the broadcast threshold is
+broadcast instead of shuffling both.
 
 Semantics preserved exactly:
 * ``updated`` uses null-propagating ``!=`` — a change from null to
@@ -25,10 +41,129 @@ than Polars reprs (``u32``, ``bool``) — the engine's native types.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from typing import Any
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["compute_stats"]
+from tmdb_index_spark.operators.upsert import check_dense_id
+
+__all__ = ["compute_stats", "RunProfile"]
+
+_STATS_SCHEMA = (
+    "name string, dtype string, null string, true string, false string, "
+    "unique string, updated string"
+)
+
+
+@dataclass(frozen=True)
+class RunProfile:
+    """The two passes of :func:`_profile` over one old/new frame pair.
+
+    ``stats`` is the new frame's aggregate row (``nonnull__<c>``, and
+    ``true__<c>`` for booleans, ``distinct__<c>`` for the rest);
+    ``updated`` the per-column null-propagating updated counts;
+    ``rows_updated`` the ids below both lengths whose row hash changed;
+    ``byte_lengths`` the summed bytes of each string/binary column."""
+
+    stats: dict[str, Any]
+    old_count: int
+    new_count: int
+    updated: dict[str, int]
+    rows_updated: int
+    byte_lengths: dict[str, int]
+
+
+def _profile(
+    df_old: DataFrame,
+    df_new: DataFrame,
+    *,
+    old_count: int | None = None,
+    approx: bool = False,
+    check_id: bool = False,
+) -> RunProfile:
+    """Both passes (module docstring).  ``old_count`` is ``df_old``'s row
+    count when the caller holds it (else one ``count()``);
+    ``check_id`` runs :func:`~tmdb_index_spark.operators.upsert.validate_id`'s
+    checks on the new frame's aggregate before the join."""
+    dtypes = df_new.dtypes
+    distinct_of = F.approx_count_distinct if approx else F.count_distinct
+
+    # Pass 1: every statistic of the new frame in one aggregate.
+    aggs = [F.count(F.lit(1)).alias("__n__")]
+    var_width = [c for c, t in dtypes if t in ("string", "binary")]
+    # Nulls are the row count less the non-nulls, and a boolean's falses
+    # its non-nulls less its trues: neither needs a slot in the
+    # aggregate buffer that every Expand row of the distinct counts
+    # carries.  A boolean's distinct count follows from the same two
+    # numbers, so it needs no Expand projection of its own.
+    for c, dtype in dtypes:
+        col = F.col(c)
+        aggs.append(F.count(col).alias(f"nonnull__{c}"))
+        if dtype == "boolean":
+            aggs.append(F.sum(col.cast("long")).alias(f"true__{c}"))
+        else:
+            aggs.append(distinct_of(col).alias(f"distinct__{c}"))
+    aggs += [F.sum(F.octet_length(c)).alias(f"bytes__{c}") for c in var_width]
+    if "id" in df_new.columns:
+        aggs += [F.min("id").alias("__min_id__"), F.max("id").alias("__max_id__")]
+    stats = df_new.agg(*aggs).collect()[0].asDict()
+    new_count = stats["__n__"]
+    if check_id:
+        check_dense_id(
+            new_count,
+            new_count - stats["nonnull__id"],
+            stats["__min_id__"],
+            stats["__max_id__"],
+            stats["distinct__id"],
+        )
+    if old_count is None:
+        old_count = df_old.count()
+
+    # Pass 2: one join on id, aggregated once.  The reference pads the
+    # shorter frame with nulls (_series_pad) and compares with
+    # null-propagating !=, so an id on one side only counts for nothing:
+    # the inner join gives the same counts, and a small side broadcasts
+    # instead of shuffling both.  The row-hash count keeps to ids below
+    # both lengths (reference change_summary).
+    updated = {c: 0 for c in df_new.columns}
+    rows_updated = 0
+    min_len = min(old_count, new_count)
+    if min_len and "id" in df_old.columns and "id" in df_new.columns:
+        old_cols = set(df_old.columns)
+        shared = [c for c in df_new.columns if c != "id" and c in old_cols]
+        # Frames with different column lists differ in every common row
+        # (the reference hashes rows of different widths); xxhash64
+        # skips nulls, so hashing would miss an added all-null column.
+        same_layout = df_old.columns == df_new.columns
+
+        def side(df: DataFrame, tag: str) -> DataFrame:
+            cols = [F.col(c).alias(f"__{tag}_{c}") for c in shared]
+            if same_layout:
+                cols.append(F.xxhash64(*df.columns).alias(f"__{tag}__"))
+            return df.select("id", *cols)
+
+        changed = F.col("id") < min_len
+        if same_layout:
+            changed = changed & (F.col("__new__") != F.col("__old__"))
+        upd = [
+            F.count(F.when(F.col(f"__new_{c}") != F.col(f"__old_{c}"), 1)).alias(f"upd__{c}")
+            for c in shared
+        ]
+        joined = side(df_new, "new").join(side(df_old, "old"), on="id")
+        row = joined.agg(F.count(F.when(changed, 1)).alias("__rows__"), *upd).collect()[0]
+        rows_updated = row["__rows__"]
+        updated.update({c: row[f"upd__{c}"] for c in shared})
+
+    return RunProfile(
+        stats=stats,
+        old_count=old_count,
+        new_count=new_count,
+        updated=updated,
+        rows_updated=rows_updated,
+        byte_lengths={c: int(stats[f"bytes__{c}"] or 0) for c in var_width},
+    )
 
 
 def _fmt(n: int, row_count: int) -> str:
@@ -38,8 +173,12 @@ def _fmt(n: int, row_count: int) -> str:
 
 
 def compute_stats(
-    df_old: DataFrame, df_new: DataFrame, approx: bool = False
-) -> DataFrame:
+    df_old: DataFrame,
+    df_new: DataFrame,
+    approx: bool = False,
+    *,
+    profile: RunProfile | None = None,
+) -> DataFrame | list[dict[str, str]]:
     """All-string stats table ``{name, dtype, null, true, false, unique,
     updated}``, one row per column of ``df_new`` (reference
     tmdb_index.py:142-175).
@@ -49,55 +188,23 @@ def compute_stats(
     plan, bounded memory per column instead of an exact hash set. The
     uniqueness flag then tolerates the sketch's error margin. Exact
     remains the default for reference/oracle parity (SCALE.md).
+
+    ``profile``: the :class:`RunProfile` of this frame pair, when the
+    caller has already made it (the run report).  The table is then
+    only rendered from it and returned as a list of row dicts — no
+    Spark action, no DataFrame round trip.
     """
-    spark = df_new.sparkSession
-    dtypes = dict(df_new.dtypes)
-    old_cols = set(df_old.columns)
-
-    distinct_of = F.approx_count_distinct if approx else F.count_distinct
-
-    # Pass 1: every per-column stat in one aggregate over df_new.
-    aggs = [F.count(F.lit(1)).alias("__n__")]
-    for c in df_new.columns:
-        col = F.col(c)
-        aggs.append(F.sum(col.isNull().cast("long")).alias(f"null__{c}"))
-        aggs.append(distinct_of(col).alias(f"distinct__{c}"))
-        aggs.append(F.count(col).alias(f"nonnull__{c}"))
-        if dtypes[c] == "boolean":
-            aggs.append(F.sum(col.cast("long")).alias(f"true__{c}"))
-            aggs.append(F.sum((~col).cast("long")).alias(f"false__{c}"))
-    stats = df_new.agg(*aggs).collect()[0].asDict()
-    row_count = stats["__n__"]
-
-    # Pass 2: updated counts — full outer join on id pads the shorter
-    # frame with nulls (reference _series_pad); null-propagating !=
-    # counts only both-non-null differences.
-    shared = [c for c in df_new.columns if c in old_cols]
-    updated: dict[str, int] = {c: 0 for c in df_new.columns}
-    if shared and "id" in df_new.columns and "id" in df_old.columns:
-        o = df_old.select("id", *[F.col(c).alias(f"__old_{c}") for c in shared if c != "id"])
-        n = df_new.select("id", *[F.col(c).alias(f"__new_{c}") for c in shared if c != "id"])
-        joined = n.join(o, on="id", how="outer")
-        upd_aggs = []
-        for c in shared:
-            if c == "id":
-                continue
-            upd_aggs.append(
-                F.sum(
-                    (F.col(f"__new_{c}") != F.col(f"__old_{c}")).cast("long")
-                ).alias(f"upd__{c}")
-            )
-        if upd_aggs:
-            upd = joined.agg(*upd_aggs).collect()[0].asDict()
-            for c in shared:
-                if c != "id":
-                    updated[c] = int(upd[f"upd__{c}"] or 0)
-
+    p = profile if profile is not None else _profile(df_old, df_new, approx=approx)
+    stats, row_count = p.stats, p.new_count
     rows = []
-    for c in df_new.columns:
-        is_bool = dtypes[c] == "boolean"
-        nonnull = int(stats[f"nonnull__{c}"] or 0)
-        distinct = int(stats[f"distinct__{c}"] or 0)
+    for c, dtype in df_new.dtypes:
+        is_bool = dtype == "boolean"
+        nonnull = int(stats[f"nonnull__{c}"])
+        if is_bool:
+            trues = int(stats[f"true__{c}"] or 0)
+            distinct = (trues > 0) + (nonnull > trues)
+        else:
+            distinct = int(stats[f"distinct__{c}"] or 0)
         # HLL error tolerance when approx: within 5% of nonnull counts
         # as "unique". Exact mode requires equality.
         unique = (
@@ -108,16 +215,14 @@ def compute_stats(
         rows.append(
             {
                 "name": c,
-                "dtype": dtypes[c],
-                "null": _fmt(int(stats[f"null__{c}"] or 0), row_count),
-                "true": _fmt(int(stats[f"true__{c}"] or 0), row_count) if is_bool else "",
-                "false": _fmt(int(stats[f"false__{c}"] or 0), row_count) if is_bool else "",
+                "dtype": dtype,
+                "null": _fmt(row_count - nonnull, row_count),
+                "true": _fmt(trues, row_count) if is_bool else "",
+                "false": _fmt(nonnull - trues, row_count) if is_bool else "",
                 "unique": "true" if unique else "",
-                "updated": _fmt(updated[c], row_count),
+                "updated": _fmt(p.updated[c], row_count),
             }
         )
-    return spark.createDataFrame(
-        rows,
-        "name string, dtype string, null string, true string, false string, "
-        "unique string, updated string",
-    )
+    if profile is not None:
+        return rows
+    return df_new.sparkSession.createDataFrame(rows, _STATS_SCHEMA)

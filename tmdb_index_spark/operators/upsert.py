@@ -29,6 +29,7 @@ __all__ = [
     "update_or_append_join",
     "align_id_col",
     "validate_id",
+    "check_dense_id",
 ]
 
 _PRECEDENCE = "__precedence__"
@@ -176,13 +177,21 @@ def validate_id(df: DataFrame) -> None:
         F.max("id").alias("mx"),
         F.count_distinct("id").alias("distinct"),
     ).collect()[0]
-    if row["n"] == 0:
+    check_dense_id(row["n"], row["nulls"], row["mn"], row["mx"], row["distinct"])
+
+
+def check_dense_id(n: int, nulls: int | None, mn, mx, distinct: int) -> None:
+    """The dense-key checks of :func:`validate_id` over already
+    aggregated id stats (row count, null count, min, max and exact
+    distinct count), so a pass that computes them anyway validates
+    without a second scan.  An empty frame passes."""
+    if n == 0:
         return
-    if (row["nulls"] or 0) != 0:
+    if (nulls or 0) != 0:
         raise AssertionError("id column must not have nulls")
-    if row["mn"] != 0:
+    if mn != 0:
         raise AssertionError("id column must start at 0")
-    if row["distinct"] != row["n"]:
+    if distinct != n:
         raise AssertionError("id column must be unique")
-    if row["mx"] != row["n"] - 1:
+    if mx != n - 1:
         raise AssertionError("id column must be consecutive")

@@ -2,8 +2,16 @@
 
 Mirrors the reference's GitHub step summary (``format_gh_step_summary``,
 tmdb_index.py:571-600): a markdown stats table + shape/changes/rss
-lines.  The stats DataFrame is tiny (one row per column) — collecting it
-to the driver for rendering is the correct plan.
+lines, built from the reference's ``_validate_id``, ``compute_stats``
+and ``change_summary`` (tmdb_index.py:107-175).
+
+Pass shape: ``validate_id`` on the old frame, then the two passes of
+the shared kernel (:mod:`tmdb_index_spark.operators.stats`) — one
+aggregate over the new frame, which also checks its ids and yields its
+row count and ``rss`` byte lengths, and one id-keyed join of the two
+frames, aggregated once (skipped when either is empty).
+``compute_stats`` and ``change_summary`` only render that result; the
+stats rows (one per column) stay on the driver for rendering.
 
 Deltas vs the reference's golden string (test_tmdb_index.py:797-827):
 dtype names are Spark's (``bigint`` not ``u32``) and ``rss`` is a
@@ -17,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tmdb_index_spark.operators.diff import change_summary
-from tmdb_index_spark.operators.stats import compute_stats
+from tmdb_index_spark.operators.stats import _profile, compute_stats
 from tmdb_index_spark.operators.upsert import validate_id
 
 __all__ = ["format_gh_step_summary", "render_markdown_table", "estimated_size_mb"]
@@ -35,26 +43,26 @@ _FIXED_WIDTHS = {
 }
 
 
+def _size_mb(dtypes: list[tuple[str, str]], n: int, byte_lengths: dict[str, int]) -> float:
+    total = 0.0
+    for name, dtype in dtypes:
+        if name in byte_lengths:
+            total += byte_lengths[name]
+        else:
+            total += _FIXED_WIDTHS.get(dtype, 8) * n
+    return total / (1024 * 1024)
+
+
 def estimated_size_mb(df: DataFrame) -> float:
     """Schema-based in-memory size estimate in MB: fixed widths per
     primitive type, summed byte lengths for strings/binary.  One
     aggregate pass; an estimate (like the reference's
     ``estimated_size``, tmdb_index.py:598), not an accounting."""
-    aggs = [F.count(F.lit(1)).alias("__n__")]
-    str_cols = []
-    for name, dtype in df.dtypes:
-        if dtype in ("string", "binary"):
-            str_cols.append(name)
-            aggs.append(F.sum(F.length(F.col(name))).alias(f"len__{name}"))
-    row = df.agg(*aggs).collect()[0].asDict()
-    n = row["__n__"]
-    total = 0.0
-    for name, dtype in df.dtypes:
-        if name in str_cols:
-            total += float(row[f"len__{name}"] or 0)
-        else:
-            total += _FIXED_WIDTHS.get(dtype, 8) * n
-    return total / (1024 * 1024)
+    var_width = [c for c, t in df.dtypes if t in ("string", "binary")]
+    row = df.agg(
+        F.count(F.lit(1)), *[F.sum(F.octet_length(c)) for c in var_width]
+    ).collect()[0]
+    return _size_mb(df.dtypes, row[0], {c: int(v or 0) for c, v in zip(var_width, row[1:])})
 
 
 def render_markdown_table(rows: list[dict[str, str]], columns: list[str]) -> str:
@@ -78,17 +86,22 @@ def render_markdown_table(rows: list[dict[str, str]], columns: list[str]) -> str
     return "\n".join(out)
 
 
-def format_gh_step_summary(df_old: DataFrame, df_new: DataFrame, filename: str) -> str:
+def format_gh_step_summary(
+    df_old: DataFrame, df_new: DataFrame, filename: str, *, old_count: int | None = None
+) -> str:
     """Render the run report (reference tmdb_index.py:571-600).
-    Validates both ids first, like the reference."""
+    Validates both ids before anything is rendered, the old frame's
+    first, like the reference; the new frame's are checked from its
+    aggregate, before the join.  ``old_count``: ``df_old``'s row count
+    when the caller holds it."""
     validate_id(df_old)
-    validate_id(df_new)
+    profile = _profile(df_old, df_new, old_count=old_count, check_id=True)
 
-    stats_rows = [r.asDict() for r in compute_stats(df_old, df_new).collect()]
-    added, removed, updated = change_summary(df_old, df_new)
-    n_rows = df_new.count()
+    stats_rows = compute_stats(df_old, df_new, profile=profile)
+    added, removed, updated = change_summary(df_old, df_new, profile=profile)
+    n_rows = profile.new_count
     n_cols = len(df_new.columns)
-    rss = estimated_size_mb(df_new)
+    rss = _size_mb(df_new.dtypes, n_rows, profile.byte_lengths)
 
     table = render_markdown_table(
         stats_rows,

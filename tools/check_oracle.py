@@ -1,16 +1,36 @@
 """Local driver-mimic: run every catalog query on Spark AND its DuckDB
 oracle, compare row count, column names, and order-insensitive values.
 A query without an oracle fails, naming the dynamic builder's error.
+DuckDB runs each oracle with its CTEs ``MATERIALIZED``: same SQL, each
+CTE evaluated once (inlined, the ``corpus_pipeline_stats`` oracle reuses
+a CTE on both sides of a join and DuckDB's plan for it outgrows 12 GiB).
 
 Usage: PYTHONPATH=/root/repo python tools/check_oracle.py [sf_dir] [names...]
 """
 
 from __future__ import annotations
 
+import re
 import sys
 
 import duckdb
 import pandas as pd
+
+_CTE = re.compile(r"^(WITH )?(\w+) AS \(", re.M)
+
+
+def materialized(sql: str) -> str:
+    """``sql`` with every CTE definition spelled ``name AS MATERIALIZED
+    (``; the query text is otherwise unchanged.  An oracle with a WITH
+    nested inside a CTE body runs as written: materialized, DuckDB
+    fails to bind those (duplicate aliases, or an internal error that
+    invalidates the connection)."""
+    sql = sql.strip()
+    ctes = list(_CTE.finditer(sql))
+    if any(sql.count("(", 0, m.start()) != sql.count(")", 0, m.start()) for m in ctes):
+        return sql
+    return _CTE.sub(lambda m: f"{m.group(1) or ''}{m.group(2)} AS MATERIALIZED (", sql)
+
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -81,7 +101,7 @@ def main() -> int:
             print(f"FAIL {name}: {why} (rows={len(got)})")
             continue
         try:
-            exp = con.sql(ORACLES[name]).df()
+            exp = con.sql(materialized(ORACLES[name])).df()
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             print(f"FAIL {name}: duckdb error: {str(e)[:300]}")
