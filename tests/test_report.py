@@ -115,9 +115,8 @@ def _parity_frames(spark, case):
 
 @pytest.mark.parametrize("case", ["same_schema", "schema_growth", "empty_old", "null_heavy"])
 def test_report_matches_standalone_stats_and_changes(spark, case):
-    # the report as cli.run_lifecycle calls it, with its count of df_old
     old, new = _parity_frames(spark, case)
-    got = format_gh_step_summary(old, new, "t.parquet", old_count=old.count())
+    got = format_gh_step_summary(old, new, "t.parquet")
     table = render_markdown_table([r.asDict() for r in compute_stats(old, new).collect()], _COLUMNS)
     added, removed, updated = change_summary(old, new)
     assert f"\n{table}\n" in got
@@ -137,6 +136,7 @@ _BROKEN_IDS = [
 def test_report_checks_ids_like_validate_id(spark, ids, message):
     good = spark.createDataFrame([(0,), (1,)], "id long")
     broken = spark.createDataFrame(ids, "id long")
+    assert validate_id(good) == 2  # the row count the report reuses
     with pytest.raises(AssertionError, match=message):
         validate_id(broken)
     with pytest.raises(AssertionError, match=message):
@@ -158,11 +158,11 @@ def _report_jobs(spark, old, new, group):
     # cached and counted first, as cli.run_lifecycle hands them over
     sc = spark.sparkContext
     old, new = old.cache(), new.cache()
-    old_count = old.count()
+    old.count()
     new.count()
     sc.setJobGroup(group, "report job count")
     try:
-        format_gh_step_summary(old, new, "t.parquet", old_count=old_count)
+        format_gh_step_summary(old, new, "t.parquet")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)

@@ -41,11 +41,10 @@ def run_lifecycle(
     ``today``, ``now``) pass through to :func:`process`.
 
     The loaded and the updated index are cached: each feeds the guard's
-    count, the report's passes, and (the updated one) the sink; the
-    report takes the loaded index's count instead of counting it again.
-    Those two caches and ``process``'s pins are released on every exit,
-    so a session that runs several entity types holds one day's frames
-    at a time."""
+    count, the report's diff, and (the updated one) the sink.  Those two
+    caches and ``process``'s pins are released on every exit, so a
+    session that runs several entity types holds one day's frames at a
+    time."""
     df = scan_or_empty(spark, filename)
     # Schema repair: stray tvdb_id on non-tv indexes is dropped at load
     # (reference tmdb_index.py:675-677).
@@ -66,9 +65,7 @@ def run_lifecycle(
             )
             return False
 
-        summary = format_gh_step_summary(
-            df, df_new, os.path.basename(filename), old_count=old_count
-        )
+        summary = format_gh_step_summary(df, df_new, os.path.basename(filename))
         print(summary)
         gh_summary = os.environ.get("GITHUB_STEP_SUMMARY")
         if gh_summary:

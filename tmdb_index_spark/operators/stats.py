@@ -6,28 +6,27 @@ column of the new frame — null count, true/false counts for booleans,
 exact uniqueness of non-null values, and an updated-count against the
 old frame — and renders a small all-string stats table.
 
-Execution shape: one kernel, :func:`_profile`, makes the numbers behind
+Execution shape: two pass functions make the numbers behind
 :func:`compute_stats`, :func:`~tmdb_index_spark.operators.diff.change_summary`
-and the run report, in exactly two passes:
+and the run report:
 
-1. ONE aggregate over the new frame: every per-column stat, the row
-   count, ``min``/``max`` of ``id`` (with its null and distinct counts,
-   the dense-key invariants) and the byte lengths of string and binary
-   columns (the report's ``rss``).  Catalyst fuses them into a single
-   scan + partial/final aggregate; the exact distinct counts share one
-   Expand.
-2. ONE id-keyed join of old and new, aggregated once: the per-column
-   ``updated`` counts and ``change_summary``'s row-hash ``updated``
-   count.  Skipped when either frame is empty, where nothing can be
-   updated.
+1. :func:`_frame_stats` — ONE aggregate over the new frame: every
+   per-column stat, the row count, ``min``/``max`` of ``id`` (with its
+   null and distinct counts, the dense-key invariants) and the byte
+   lengths of string and binary columns (the report's ``rss``).
+   Catalyst fuses them into a single scan + partial/final aggregate;
+   the exact distinct counts share one Expand.
+2. :func:`_join_counts` — ONE id-keyed (inner) join of old and new,
+   aggregated once: the per-column ``updated`` counts and
+   ``change_summary``'s row-hash ``updated`` count.
 
-The run report makes one :class:`RunProfile` and hands it to
-``compute_stats`` and ``change_summary``, which then only render it.
-The reference pads the shorter frame with nulls (``_series_pad``,
-tmdb_index.py:135-139) before comparing; a padded row never counts
-under null-propagating ``!=``, so the join is an inner join on ``id``
-— the same counts, and a side under the broadcast threshold is
-broadcast instead of shuffling both.
+The run report's kernel, :func:`_profile`, runs pass 1, checks the new
+frame's ids from its row, then runs pass 2 (skipped when either frame
+is empty, where nothing can be updated), and hands the
+:class:`RunProfile` to ``compute_stats`` and ``change_summary``, which
+then only render it.  Called on their own, ``compute_stats`` runs both
+passes and ``change_summary`` two counts and a pass 2 that carries only
+the row hashes.
 
 Semantics preserved exactly:
 * ``updated`` uses null-propagating ``!=`` — a change from null to
@@ -59,13 +58,14 @@ _STATS_SCHEMA = (
 
 @dataclass(frozen=True)
 class RunProfile:
-    """The two passes of :func:`_profile` over one old/new frame pair.
+    """The run report's numbers for one old/new frame pair (:func:`_profile`).
 
-    ``stats`` is the new frame's aggregate row (``nonnull__<c>``, and
-    ``true__<c>`` for booleans, ``distinct__<c>`` for the rest);
-    ``updated`` the per-column null-propagating updated counts;
-    ``rows_updated`` the ids below both lengths whose row hash changed;
-    ``byte_lengths`` the summed bytes of each string/binary column."""
+    ``stats`` is the new frame's pass-1 row (:func:`_frame_stats`);
+    ``updated`` (the null-propagating updated count of each column the
+    two frames share; absent means zero) and ``rows_updated`` (the
+    common ids whose row hash changed) come from :func:`_join_counts`;
+    ``byte_lengths`` are the summed bytes of each string/binary
+    column."""
 
     stats: dict[str, Any]
     old_count: int
@@ -75,94 +75,106 @@ class RunProfile:
     byte_lengths: dict[str, int]
 
 
-def _profile(
-    df_old: DataFrame,
-    df_new: DataFrame,
-    *,
-    old_count: int | None = None,
-    approx: bool = False,
-    check_id: bool = False,
-) -> RunProfile:
-    """Both passes (module docstring).  ``old_count`` is ``df_old``'s row
-    count when the caller holds it (else one ``count()``);
-    ``check_id`` runs :func:`~tmdb_index_spark.operators.upsert.validate_id`'s
-    checks on the new frame's aggregate before the join."""
-    dtypes = df_new.dtypes
+def _frame_stats(df: DataFrame, approx: bool = False) -> dict[str, Any]:
+    """Pass 1: every statistic of ``df`` in one aggregate row — ``__n__``
+    (rows), ``nonnull__<c>``, ``true__<c>`` for booleans and
+    ``distinct__<c>`` for the rest, ``bytes__<c>`` for string/binary
+    columns, and ``__min_id__``/``__max_id__`` when there is an ``id``."""
     distinct_of = F.approx_count_distinct if approx else F.count_distinct
-
-    # Pass 1: every statistic of the new frame in one aggregate.
     aggs = [F.count(F.lit(1)).alias("__n__")]
-    var_width = [c for c, t in dtypes if t in ("string", "binary")]
     # Nulls are the row count less the non-nulls, and a boolean's falses
     # its non-nulls less its trues: neither needs a slot in the
     # aggregate buffer that every Expand row of the distinct counts
     # carries.  A boolean's distinct count follows from the same two
     # numbers, so it needs no Expand projection of its own.
-    for c, dtype in dtypes:
+    for c, dtype in df.dtypes:
         col = F.col(c)
         aggs.append(F.count(col).alias(f"nonnull__{c}"))
         if dtype == "boolean":
             aggs.append(F.sum(col.cast("long")).alias(f"true__{c}"))
         else:
             aggs.append(distinct_of(col).alias(f"distinct__{c}"))
-    aggs += [F.sum(F.octet_length(c)).alias(f"bytes__{c}") for c in var_width]
-    if "id" in df_new.columns:
+    aggs += [
+        F.sum(F.octet_length(c)).alias(f"bytes__{c}")
+        for c, dtype in df.dtypes
+        if dtype in ("string", "binary")
+    ]
+    if "id" in df.columns:
         aggs += [F.min("id").alias("__min_id__"), F.max("id").alias("__max_id__")]
-    stats = df_new.agg(*aggs).collect()[0].asDict()
-    new_count = stats["__n__"]
-    if check_id:
-        check_dense_id(
-            new_count,
-            new_count - stats["nonnull__id"],
-            stats["__min_id__"],
-            stats["__max_id__"],
-            stats["distinct__id"],
-        )
-    if old_count is None:
-        old_count = df_old.count()
+    return df.agg(*aggs).collect()[0].asDict()
 
-    # Pass 2: one join on id, aggregated once.  The reference pads the
-    # shorter frame with nulls (_series_pad) and compares with
-    # null-propagating !=, so an id on one side only counts for nothing:
-    # the inner join gives the same counts, and a small side broadcasts
-    # instead of shuffling both.  The row-hash count keeps to ids below
-    # both lengths (reference change_summary).
-    updated = {c: 0 for c in df_new.columns}
-    rows_updated = 0
-    min_len = min(old_count, new_count)
-    if min_len and "id" in df_old.columns and "id" in df_new.columns:
-        old_cols = set(df_old.columns)
-        shared = [c for c in df_new.columns if c != "id" and c in old_cols]
-        # Frames with different column lists differ in every common row
-        # (the reference hashes rows of different widths); xxhash64
-        # skips nulls, so hashing would miss an added all-null column.
-        same_layout = df_old.columns == df_new.columns
 
-        def side(df: DataFrame, tag: str) -> DataFrame:
-            cols = [F.col(c).alias(f"__{tag}_{c}") for c in shared]
-            if same_layout:
-                cols.append(F.xxhash64(*df.columns).alias(f"__{tag}__"))
-            return df.select("id", *cols)
+def _shared_columns(df_old: DataFrame, df_new: DataFrame) -> list[str]:
+    return [c for c in df_new.columns if c != "id" and c in df_old.columns]
 
-        changed = F.col("id") < min_len
+
+def _join_counts(
+    df_old: DataFrame, df_new: DataFrame, columns: list[str]
+) -> tuple[int, dict[str, int]]:
+    """Pass 2: one join on ``id``, aggregated once, giving the common
+    ids whose row hash changed and the null-propagating updated count of
+    each of ``columns``.
+
+    The reference pads the shorter frame with nulls (_series_pad) and
+    compares with null-propagating !=, so an id on one side only counts
+    for nothing: the inner join gives the same counts, and a side under
+    the broadcast threshold broadcasts instead of shuffling both.  For dense frames the common
+    ids are exactly the ids below both lengths, the rows the reference
+    compares."""
+    if "id" not in df_old.columns or "id" not in df_new.columns:
+        return 0, {}
+    # Frames with different column lists differ in every common row
+    # (the reference hashes rows of different widths); xxhash64 skips
+    # nulls, so hashing would miss an added all-null column.
+    same_layout = df_old.columns == df_new.columns
+
+    def side(df: DataFrame, tag: str) -> DataFrame:
+        cols = [F.col(c).alias(f"__{tag}_{c}") for c in columns]
         if same_layout:
-            changed = changed & (F.col("__new__") != F.col("__old__"))
-        upd = [
-            F.count(F.when(F.col(f"__new_{c}") != F.col(f"__old_{c}"), 1)).alias(f"upd__{c}")
-            for c in shared
-        ]
-        joined = side(df_new, "new").join(side(df_old, "old"), on="id")
-        row = joined.agg(F.count(F.when(changed, 1)).alias("__rows__"), *upd).collect()[0]
-        rows_updated = row["__rows__"]
-        updated.update({c: row[f"upd__{c}"] for c in shared})
+            cols.append(F.xxhash64(*df.columns).alias(f"__{tag}__"))
+        return df.select("id", *cols)
 
+    changed = F.col("__new__") != F.col("__old__") if same_layout else F.lit(True)
+    upd = [
+        F.count(F.when(F.col(f"__new_{c}") != F.col(f"__old_{c}"), 1)).alias(f"upd__{c}")
+        for c in columns
+    ]
+    joined = side(df_new, "new").join(side(df_old, "old"), on="id")
+    row = joined.agg(F.count(F.when(changed, 1)).alias("__rows__"), *upd).collect()[0]
+    return row["__rows__"], {c: row[f"upd__{c}"] for c in columns}
+
+
+def _profile(df_old: DataFrame, df_new: DataFrame, old_count: int) -> RunProfile:
+    """The run report's kernel, for an old frame that has passed
+    :func:`~tmdb_index_spark.operators.upsert.validate_id` with
+    ``old_count`` rows: pass 1 over the new frame, the same id checks on
+    its row (so a broken new frame raises before the join), then pass 2,
+    skipped when either frame is empty."""
+    stats = _frame_stats(df_new)
+    new_count = stats["__n__"]
+    check_dense_id(
+        new_count,
+        new_count - stats["nonnull__id"],
+        stats["__min_id__"],
+        stats["__max_id__"],
+        stats["distinct__id"],
+    )
+    rows_updated, updated = (
+        _join_counts(df_old, df_new, _shared_columns(df_old, df_new))
+        if old_count and new_count
+        else (0, {})
+    )
     return RunProfile(
         stats=stats,
         old_count=old_count,
         new_count=new_count,
         updated=updated,
         rows_updated=rows_updated,
-        byte_lengths={c: int(stats[f"bytes__{c}"] or 0) for c in var_width},
+        byte_lengths={
+            c: int(stats[f"bytes__{c}"] or 0)
+            for c, dtype in df_new.dtypes
+            if dtype in ("string", "binary")
+        },
     )
 
 
@@ -191,11 +203,19 @@ def compute_stats(
 
     ``profile``: the :class:`RunProfile` of this frame pair, when the
     caller has already made it (the run report).  The table is then
-    only rendered from it and returned as a list of row dicts — no
-    Spark action, no DataFrame round trip.
+    only rendered from it and returned as a list of row dicts, not a
+    DataFrame: reading one back would cost the report a Spark job
+    (``createDataFrame`` is RDD-backed), and the render cannot move to
+    a helper because ``perfbench/``'s per-layer trace times the report's
+    ``compute_stats`` call by name.  Without ``profile``, both passes
+    run here and the result is the reference API's DataFrame.
     """
-    p = profile if profile is not None else _profile(df_old, df_new, approx=approx)
-    stats, row_count = p.stats, p.new_count
+    if profile is None:
+        stats = _frame_stats(df_new, approx)
+        updated = _join_counts(df_old, df_new, _shared_columns(df_old, df_new))[1]
+    else:
+        stats, updated = profile.stats, profile.updated
+    row_count = stats["__n__"]
     rows = []
     for c, dtype in df_new.dtypes:
         is_bool = dtype == "boolean"
@@ -220,7 +240,7 @@ def compute_stats(
                 "true": _fmt(trues, row_count) if is_bool else "",
                 "false": _fmt(nonnull - trues, row_count) if is_bool else "",
                 "unique": "true" if unique else "",
-                "updated": _fmt(p.updated[c], row_count),
+                "updated": _fmt(updated.get(c, 0), row_count),
             }
         )
     if profile is not None:

@@ -161,8 +161,9 @@ def align_id_col(df: DataFrame) -> DataFrame:
     return dense.join(df, on="id", how="left").select("id", *rest)
 
 
-def validate_id(df: DataFrame) -> None:
-    """Assert the dense-key invariant in ONE aggregate pass.
+def validate_id(df: DataFrame) -> int:
+    """Assert the dense-key invariant in ONE aggregate pass; returns the
+    row count the pass computes anyway.
 
     sorted+consecutive+unique+starts-at-0 ⇔
     ``nulls==0 ∧ min==0 ∧ max==n-1 ∧ distinct==n`` (reference
@@ -178,6 +179,7 @@ def validate_id(df: DataFrame) -> None:
         F.count_distinct("id").alias("distinct"),
     ).collect()[0]
     check_dense_id(row["n"], row["nulls"], row["mn"], row["mx"], row["distinct"])
+    return row["n"]
 
 
 def check_dense_id(n: int, nulls: int | None, mn, mx, distinct: int) -> None:

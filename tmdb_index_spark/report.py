@@ -5,11 +5,12 @@ tmdb_index.py:571-600): a markdown stats table + shape/changes/rss
 lines, built from the reference's ``_validate_id``, ``compute_stats``
 and ``change_summary`` (tmdb_index.py:107-175).
 
-Pass shape: ``validate_id`` on the old frame, then the two passes of
-the shared kernel (:mod:`tmdb_index_spark.operators.stats`) — one
-aggregate over the new frame, which also checks its ids and yields its
-row count and ``rss`` byte lengths, and one id-keyed join of the two
-frames, aggregated once (skipped when either is empty).
+Pass shape: ``validate_id`` on the old frame (which also yields its
+row count), then the two passes of the report's kernel
+(:func:`tmdb_index_spark.operators.stats._profile`) — one aggregate
+over the new frame, which also checks its ids and yields its row count
+and ``rss`` byte lengths, and one id-keyed join of the two frames,
+aggregated once (skipped when either is empty).
 ``compute_stats`` and ``change_summary`` only render that result; the
 stats rows (one per column) stay on the driver for rendering.
 
@@ -86,16 +87,12 @@ def render_markdown_table(rows: list[dict[str, str]], columns: list[str]) -> str
     return "\n".join(out)
 
 
-def format_gh_step_summary(
-    df_old: DataFrame, df_new: DataFrame, filename: str, *, old_count: int | None = None
-) -> str:
+def format_gh_step_summary(df_old: DataFrame, df_new: DataFrame, filename: str) -> str:
     """Render the run report (reference tmdb_index.py:571-600).
     Validates both ids before anything is rendered, the old frame's
     first, like the reference; the new frame's are checked from its
-    aggregate, before the join.  ``old_count``: ``df_old``'s row count
-    when the caller holds it."""
-    validate_id(df_old)
-    profile = _profile(df_old, df_new, old_count=old_count, check_id=True)
+    aggregate, before the join."""
+    profile = _profile(df_old, df_new, old_count=validate_id(df_old))
 
     stats_rows = compute_stats(df_old, df_new, profile=profile)
     added, removed, updated = change_summary(df_old, df_new, profile=profile)
