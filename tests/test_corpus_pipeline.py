@@ -13,6 +13,7 @@ import hashlib
 
 from pyspark.sql import functions as F
 
+from tmdb_index_spark.functions.text import LANG_MARKERS
 from tmdb_index_spark.operators.corpus_pipeline import (
     STAGE_NAMES,
     corpus_pipeline_stats,
@@ -117,6 +118,70 @@ def test_prepare_corpus_stage_semantics(spark):
         assert cur["docs_in"] == prev["docs_out"]
         if STAGE_NAMES[k] != "pack":
             assert cur["docs_dropped"] == cur["docs_in"] - cur["docs_out"]
+
+
+def _scored(prefix: str, k: int) -> str:
+    # ten alpha-only words, k of them en stopwords: quality_micros is
+    # floor(1e6 * k / 10) - 0 = 100_000 * k
+    return " ".join(list(LANG_MARKERS["en"][:k]) + _words(prefix, 10 - k).split())
+
+
+def test_prepare_corpus_quality_gate_drops_below_source_p25(spark):
+    from tmdb_index_spark.operators.materialize import release_pins
+
+    # (source, stopword count k) per doc; doc ids 1..16 in this order
+    plan = (
+        # n=6: p25 at sorted position (6+3)//4 = 2 -> k=2; the k=0 doc
+        # drops, the three k=2 docs tie at the threshold and stay
+        [("sa", k) for k in (2, 0, 5, 2, 3, 2)]
+        # n=9: position (9+3)//4 = 3 -> k=2, tied at positions 2-4; the
+        # k=0 doc drops
+        + [("sb", k) for k in (3, 2, 6, 2, 0, 4, 2, 5, 3)]
+        # one-doc source: its own p25, so its k=0 doc stays
+        + [("sc", 0)]
+    )
+    rows = [
+        (i, _scored(chr(97 + i), k), "en", src)
+        for i, (src, k) in enumerate(plan, start=1)
+    ]
+    docs = spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string"
+    )
+    out = prepare_corpus(docs, _embeddings(spark))
+    stages = dict(out["stages"])
+    scores = {
+        r["doc_id"]: r["__q__"]
+        for r in stages["input"].select("doc_id", "__q__").collect()
+    }
+    kept = sorted(r["doc_id"] for r in stages["quality"].collect())
+    release_pins()
+    assert scores == {i: 100_000 * k for i, (_, k) in enumerate(plan, 1)}
+    # docs 2 (sa, k=0) and 11 (sb, k=0) drop: docs_out = 16 - 2
+    assert kept == [i for i in range(1, 17) if i not in (2, 11)]
+    assert len(kept) == 14
+
+
+def test_corpus_pipeline_stats_job_count(spark):
+    # the quality threshold is one hash aggregate, not the bucketed
+    # grouped_rank chain (percentile_approx cuts, offset and row_number
+    # windows) that the stats ran three times: 52 jobs over the build
+    # and the collect, where the chain took 88
+    from tmdb_index_spark.operators.materialize import release_pins
+
+    sc = spark.sparkContext
+    group = "test-corpus-stats-jobs"
+    sc.setJobGroup(group, "corpus stats job count")
+    try:
+        stats = corpus_pipeline_stats(_docs(spark), _embeddings(spark))
+        plan = stats._jdf.queryExecution().optimizedPlan().toString()
+        assert len(stats.collect()) == len(STAGE_NAMES)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        release_pins()
+    assert "percentile_disc" in plan
+    assert "percentile_approx" not in plan
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 52
 
 
 def test_prepare_corpus_returns_survivor_frames(spark):

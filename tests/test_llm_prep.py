@@ -717,6 +717,27 @@ def test_bpe_train_merges_matches_pure_python_reference(spark):
     assert got == ref_bpe(text, 6)
 
 
+def test_bpe_train_merges_repin_keeps_merges(spark, monkeypatch):
+    # re-pinning the vocab frame every BPE_REPIN_ROUNDS rounds cuts its
+    # lineage only; with the period at 2, k=5 pins after rounds 2 and 4
+    # and must learn the same merges as the unpatched run
+    from tmdb_index_spark.operators import llm_prep
+    from tmdb_index_spark.operators import materialize as M
+
+    docs = spark.createDataFrame(
+        [(1, "low low low lower lowest"), (2, "newer newest new low")],
+        "doc_id long, text string",
+    )
+    want = [tuple(r) for r in llm_prep.bpe_train_merges(docs, k=5).collect()]
+    M.release_pins()
+    monkeypatch.setattr(llm_prep, "BPE_REPIN_ROUNDS", 2)
+    got = [tuple(r) for r in llm_prep.bpe_train_merges(docs, k=5).collect()]
+    assert len(M._PINNED_FRAMES) == 3  # word counts + rounds 2 and 4
+    M.release_pins()
+    assert len(want) == 5
+    assert got == want
+
+
 def test_bpe_encode_reproduces_trainer_state_and_word_boundaries(spark):
     from tmdb_index_spark.operators.llm_prep import (
         bpe_encode,

@@ -1159,8 +1159,9 @@ def test_ivfpq_no_joins_one_cell_shuffle(spark):
 
 
 def test_corpus_pipeline_plan_pinned_no_cartesian_no_python_rows(spark):
-    # The composite chains 8 pinned stages; each stats row consumes a
-    # stage twice (own docs_out + next stage's docs_in). Round 14:
+    # The composite chains 8 stages, 6 of them pinned (quality and
+    # lang are filters over the pinned input); the stats union reads
+    # each stage once and derives docs_in from the counts. Round 14:
     # plan truncation is SKIP-LEVEL — checkpoints cut lineage every
     # OTHER stage (an all-cache chain OOMed the driver at plan build;
     # an all-checkpoint chain serializes the build, since a "lazy"
@@ -1173,10 +1174,12 @@ def test_corpus_pipeline_plan_pinned_no_cartesian_no_python_rows(spark):
     # cartesian pair generation, no row-at-a-time Python.
     p = _plan(spark, "corpus_pipeline_stats")
     assert "CartesianProduct" not in p
-    # NOTE: BroadcastNestedLoopJoin IS expected here — the stats
-    # assembly crossJoins 1-row count aggregates (docs_in × docs_out),
-    # the bounded-scalar-join shape; what must never appear is a
-    # partition-level cartesian over data-proportional frames.
+    # NOTE: BroadcastNestedLoopJoin IS expected here — the per-stage
+    # counts come from one aggregate over a union of the stage frames,
+    # joined to a broadcast stage spine, and the pack row crossJoins
+    # two 1-row aggregates (the bounded-scalar-join shape); what must
+    # never appear is a partition-level cartesian over
+    # data-proportional frames.
     assert "BatchEvalPython" not in p  # Arrow stages only
     # one truncated scan per pinned stage consumption; the truncated
     # stage frames are consumed 10+ times by the 9 stats rows

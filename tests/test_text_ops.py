@@ -10,6 +10,7 @@ from tests.conftest import rows
 from tmdb_index_spark.functions.text import (
     doc_fingerprint,
     portable_hash60,
+    quality_p25,
     token_count,
     tokens,
     word_shingles,
@@ -775,3 +776,44 @@ def test_normalize_text_semantics_and_engine_parity(spark):
             f"SELECT {expr} FROM (SELECT ? AS text)", params=[text]
         ).fetchone()[0]
         assert sql_val == got[doc_id], doc_id
+
+
+def test_quality_p25_matches_python_rank(spark):
+    # the per-source threshold is the value at ascending position
+    # (n + 3) // 4, computed here in plain Python, never by a Spark rank
+    import random
+
+    rng = random.Random(25)
+    spans = [(-5, 5), (-1_000_000, -999_990), (999_990, 1_000_000),
+             (-1_000_000, 1_000_000)]
+    data = []
+    for g, (lo, hi) in enumerate(spans):
+        for n in range(1, 9):
+            for _ in range(n):
+                data.append((f"s{g}n{n}", rng.randint(lo, hi)))
+    data += [(None, 7), (None, -3), (None, 1)]
+    df = spark.createDataFrame(
+        [(i, src, q) for i, (src, q) in enumerate(data)],
+        "doc_id long, source string, q long",
+    )
+    groups: dict = {}
+    for src, q in data:
+        groups.setdefault(src, []).append(q)
+    want = {
+        src: sorted(qs)[(len(qs) + 3) // 4 - 1] for src, qs in groups.items()
+    }
+    thr = df.groupBy("source").agg(quality_p25("q").alias("thr"))
+    assert dict(thr.collect()) == want
+    assert dict(thr.dtypes)["thr"] == "bigint"
+
+    # the stage-1 gate: the inner join drops the NULL-source group
+    kept = (
+        df.join(F.broadcast(thr), "source")
+        .filter(F.col("q") >= F.col("thr"))
+        .select("doc_id")
+    )
+    assert sorted(r[0] for r in kept.collect()) == [
+        i
+        for i, (src, q) in enumerate(data)
+        if src is not None and q >= want[src]
+    ]

@@ -28,6 +28,7 @@ __all__ = [
     "token_count",
     "quality_features",
     "quality_micros",
+    "quality_p25",
     "lang_scores",
     "doc_fingerprint",
 ]
@@ -201,6 +202,26 @@ def quality_micros(col: Column | str) -> Column:
             F.lit(1e6) * n_punct.cast("double")
             / F.greatest(n_chars, F.lit(1)).cast("double")
         )
+    ).cast("long")
+
+
+def quality_p25(col: str) -> Column:
+    """Aggregate: the exact 25th-percentile :func:`quality_micros`
+    score of each group, as ``long`` — the value at ascending position
+    ``ceil(n/4) = (n + 3) div 4``, the threshold of the adaptive
+    per-source quality gate. ``col`` names the score column.
+
+    ``percentile_disc(0.25)`` returns exactly that position's value;
+    ties (and any tiebreak among them) cannot change which value sits
+    there, and NULL scores are ignored. Scale: it plans as one
+    ``ObjectHashAggregate``, partially merged map-side, whose
+    per-group buffer is a value→count map. Scores are integers in
+    [−1e6, 1e6], so a group's map holds at most 2,000,001 entries
+    whatever its row count — no window, no sort over the data, nothing
+    collected to the driver. The result is a double of an integer
+    below 2^53, so the ``long`` cast is exact."""
+    return F.expr(
+        f"percentile_disc(0.25) WITHIN GROUP (ORDER BY `{col}`)"
     ).cast("long")
 
 

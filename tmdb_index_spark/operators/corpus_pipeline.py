@@ -14,8 +14,8 @@ chain a pretraining data pipeline runs, in order:
 1. **quality** — per-source ADAPTIVE p25 threshold (the FineWeb
    per-dump lesson; same recipe as the certified
    ``adaptive_quality_filter``): keep docs scoring at or above their
-   source's 25th percentile. Threshold via :func:`grouped_rank`'s
-   funnel-free exact rank, broadcast back.
+   source's 25th percentile. The threshold is one exact hash
+   aggregate (:func:`quality_p25`), broadcast back.
 2. **lang** — declared-language keep-list.
 3. **exact_dedup** — keep lowest id per md5(text).
 4. **lsh_neardup** — MinHash-LSH candidate pairs + exact Jaccard
@@ -50,17 +50,18 @@ row per stage with exact integer ``docs_in / docs_out /
 docs_dropped / tokens_out`` — the per-stage yield report every
 corpus-prep run publishes.
 
-Scale design: every stage's survivor frame is pinned
+Scale design: the survivor frames of stages 0 and 3-7 are pinned
 (:func:`pin_frame` — ``checkpoint`` here: chained pins need the
 logical-plan truncation, not just the data pin; ``parquet`` at
-100 TB) so the
-documents parquet is scanned O(1) times and each stage's work runs
-exactly once even though the stats frame consumes every stage twice
-(as its own ``docs_out`` and the next stage's ``docs_in``). No stage
-introduces an unbounded window: quality ranks via bucketed
-``grouped_rank``, budget sampling is map-only, packing shards its
-running sums. The only driver-side materializations are the bounded
-k-means fit sample and the |sources|-row allocation table.
+100 TB) so the documents parquet is scanned O(1) times and each
+pinned stage's work runs once however many consumers read it (the
+next stage and the stats union). The unpinned quality and lang
+stages are a filter behind one small per-source aggregate over the
+pinned input, re-run by each consumer. No stage introduces an
+unbounded window: the quality threshold is a bounded-buffer hash
+aggregate, budget sampling is map-only, packing shards its running
+sums. The only driver-side materializations are the bounded k-means
+fit sample and the |sources|-row allocation table.
 """
 
 from __future__ import annotations
@@ -71,6 +72,7 @@ from pyspark.sql import functions as F
 from tmdb_index_spark.functions.text import (
     portable_hash60,
     quality_micros,
+    quality_p25,
     token_count,
 )
 from tmdb_index_spark.operators.dedup import dedup_keep_first
@@ -80,7 +82,6 @@ from tmdb_index_spark.operators.llm_prep import (
     pack_sequences,
 )
 from tmdb_index_spark.operators.materialize import pin_frame
-from tmdb_index_spark.operators.ordering import grouped_rank
 from tmdb_index_spark.operators.sampling import waterfill_allocation
 from tmdb_index_spark.operators.similarity import (
     IVF_BLAS_ASSIGN_THRESHOLD,
@@ -341,19 +342,10 @@ def _prepare_corpus_stages(
         scratch_dir,
     )
 
-    # 1. per-source adaptive p25 quality gate
-    ranked = grouped_rank(
-        base.select(id_col, source_col, "__q__"),
-        "__q__",
-        tiebreak=[id_col],
-        partition_cols=[source_col],
-        rank_col="__r__",
-        n_col="__n__",
-        ascending=True,
-    )
-    thr = ranked.filter(F.col("__r__") == F.expr("(__n__ + 3) div 4")).select(
-        source_col, F.col("__q__").alias("__thr__")
-    )
+    # 1. per-source adaptive p25 quality gate: one hash aggregate,
+    # broadcast back; the inner join drops NULL-source docs (a NULL
+    # key never matches)
+    thr = base.groupBy(source_col).agg(quality_p25("__q__").alias("__thr__"))
     s1 = (
         base.join(F.broadcast(thr), source_col)
         .filter(F.col("__q__") >= F.col("__thr__"))

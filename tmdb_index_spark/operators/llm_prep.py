@@ -1176,6 +1176,12 @@ def dsir_logweights(
     )
 
 
+#: :func:`bpe_train_merges` cuts its vocab frame's lineage with a
+#: checkpoint pin every this many rounds, so the chained ``replace``
+#: work re-run per round stays bounded (O(k) in total, not O(k²)).
+BPE_REPIN_ROUNDS = 32
+
+
 def bpe_train_merges(
     df: DataFrame,
     k: int = 8,
@@ -1257,7 +1263,9 @@ def bpe_train_merges(
     # unchanged; the savings are the pin calls and the block storage.
     # Per-round CACHE pins were already measured worse in round 14
     # (5.0 → 7.2 s — InMemoryRelation build cost); this removes the
-    # per-round materialization instead of re-homing it.
+    # per-round materialization instead of re-homing it. Past
+    # BPE_REPIN_ROUNDS rounds the re-run replaces would add up to
+    # O(k²) work, so the chain is re-pinned every that many rounds.
     cur = pin_frame(words, "checkpoint")
     merges: list[tuple] = []
     # split on the marker yields empties between/around the wrapped
@@ -1297,6 +1305,8 @@ def bpe_train_merges(
             ).alias("__s__"),
             "__wf__",
         )
+        if step % BPE_REPIN_ROUNDS == 0:
+            cur = pin_frame(cur, "checkpoint")
     return spark.createDataFrame(
         merges,
         "step bigint, left_sym string, right_sym string, "

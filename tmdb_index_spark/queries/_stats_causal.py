@@ -1116,34 +1116,20 @@ def adaptive_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs at or above it are kept): quality score = stopword density
     minus punctuation density, quantized to exact integer micros via
     FLOOR (identical double division then FLOOR on both engines — no
-    float-tie hazard in the ranking), per-source p25 found by exact
-    rank ``k = (n + 3) DIV 4`` over :func:`grouped_rank`'s funnel-free
-    buckets (a naive ``row_number`` window partitioned by the ~20
-    sources would sort data-proportional slices in single tasks), and
-    the 20-row threshold frame broadcasts back for the keep count.
-    The score is :func:`~tmdb_index_spark.functions.text
-    .quality_micros` — the ONE shared Python source of the recipe the
-    corpus composite also calls (round-10 advisor: the previous
-    inlined copies could silently drift)."""
-    from tmdb_index_spark.functions.text import quality_micros
-    from tmdb_index_spark.operators.ordering import grouped_rank
+    float-tie hazard in the ranking), per-source p25 = the score at
+    exact rank ``k = (n + 3) DIV 4``, found by one hash aggregate
+    (:func:`~tmdb_index_spark.functions.text.quality_p25`, whose
+    per-source buffer is bounded by the score range, not the row
+    count — no window sorts a source's rows in one task), and the
+    20-row threshold frame broadcasts back for the keep count. The
+    score (:func:`~tmdb_index_spark.functions.text.quality_micros`)
+    and the threshold are the ONE shared Python source of the recipe
+    the corpus composite also calls, so the two cannot drift."""
+    from tmdb_index_spark.functions.text import quality_micros, quality_p25
 
     docs = _t(spark, sf_dir, "documents")
-    scored = docs.select(
-        "doc_id", "source", quality_micros("text").alias("__q__")
-    )
-    ranked = grouped_rank(
-        scored,
-        "__q__",
-        tiebreak=["doc_id"],
-        partition_cols=["source"],
-        rank_col="__r__",
-        n_col="__n__",
-        ascending=True,
-    )
-    thr = ranked.filter(
-        F.col("__r__") == F.expr("(__n__ + 3) div 4")
-    ).select("source", F.col("__q__").alias("__thr__"))
+    scored = docs.select("source", quality_micros("text").alias("__q__"))
+    thr = scored.groupBy("source").agg(quality_p25("__q__").alias("__thr__"))
     n = F.count(F.lit(1))
     kept = F.sum(F.when(F.col("__q__") >= F.col("__thr__"), 1).otherwise(0))
     return (
