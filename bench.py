@@ -309,25 +309,6 @@ def main() -> int:
     passes: list[dict[str, float]] = []
     from tmdb_index_spark.operators.materialize import release_pins
 
-    # Evidence mode (round-15 VERDICT #2): sf0.1 wall time is
-    # overhead-bound on local[32] (the 8-core run beats the 32-core
-    # run), so parallelism/structure claims need a noise-immune metric.
-    # SPARK_GRAFT_BENCH_EVIDENCE=jobs additionally records per-query
-    # Spark job counts at plan BUILD vs at CONSUME into the JSON
-    # ("jobs": {name: [build, consume]}). Counting uses the MAX
-    # retained job id (ids are sequential), so the status tracker's
-    # retained-job eviction cap cannot clamp deltas late in a sweep.
-    # ADDITIVE ONLY: off by default, and when off the timed loop below
-    # is byte-identical to the round-1 methodology; when on, the two
-    # extra py4j probes per query add ~1 ms inside the timed region —
-    # use the default mode for referent wall-clock comparisons.
-    evidence = os.environ.get("SPARK_GRAFT_BENCH_EVIDENCE") == "jobs"
-    job_counts: dict[str, list[int]] = {}
-
-    def _max_job_id() -> int:
-        ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
-        return max(ids) if ids else -1
-
     for _ in range(runs):
         # Drop operator pins (cascade rollup hour/day frames, bm25
         # corpus cache, ...) AND the whole SQL cache between passes so
@@ -337,26 +318,11 @@ def main() -> int:
         spark.catalog.clearCache()
         this_pass: dict[str, float] = {}
         for name in names:
-            if evidence:
-                j0 = _max_job_id()
-                t0 = time.perf_counter()
-                df = QUERIES[name](spark, sf_dir)
-                j1 = _max_job_id()
-                df.write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
-                j2 = _max_job_id()
-                prev = job_counts.get(name)
-                cur = [j1 - j0, j2 - j1]
-                # keep the minimum-total pass (same rule as timings:
-                # measure the code, not scheduler/eviction noise)
-                if prev is None or sum(cur) < sum(prev):
-                    job_counts[name] = cur
-            else:
-                t0 = time.perf_counter()
-                QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                dt = time.perf_counter() - t0
+            t0 = time.perf_counter()
+            QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            dt = time.perf_counter() - t0
             this_pass[name] = round(dt, 3)
             timings[name] = round(min(timings.get(name, dt), dt), 3)
         passes.append(this_pass)
@@ -376,8 +342,6 @@ def main() -> int:
         "passes": passes,
         "sf": sf,
     }
-    if evidence:
-        out["jobs"] = job_counts
     if "q1_pricing_summary" in timings:
         out["q1_anchor_ratio"] = round(
             timings["q1_pricing_summary"] / Q1_ANCHOR_REFERENT_SEC, 3
@@ -411,9 +375,7 @@ def main() -> int:
         ) as fh:
             json.dump(out, fh)
             fh.write("\n")
-    # "jobs" (evidence mode) can be as large as "queries" — keep it in
-    # the file artifact only, never risk the stdout tail capture.
-    compact = {k: v for k, v in out.items() if k not in ("passes", "jobs")}
+    compact = {k: v for k, v in out.items() if k != "passes"}
     # Non-headline sets carry ~45-190 queries: the timings dict alone
     # can overflow the driver's 2000-char tail capture, reintroducing
     # parsed-null (r8 ADVICE) — the file artifact keeps the detail,
