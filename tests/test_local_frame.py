@@ -1,10 +1,11 @@
-"""The feed batches enter Spark as Arrow-built local relations.
+"""The feed batches enter Spark as scans of scratch parquet files.
 
-``_local_frame`` must give exactly what ``spark.createDataFrame(rows,
+``local_frame`` must give exactly what ``spark.createDataFrame(rows,
 schema)`` gives (values, schema, the per-row verifier's errors) while
-planning as a ``LocalRelation``, so the daily lifecycle starts no
-Python worker.  Timestamps are checked under a non-UTC local zone:
-the list path reads a naive datetime as local time, pyarrow as UTC.
+planning as a file scan (or, when empty, a ``LocalRelation``), so the
+daily lifecycle starts no Python worker and keeps no rows in its
+plans.  Timestamps are checked under a non-UTC local zone: the list
+path reads a naive datetime as local time, pyarrow as UTC.
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ from datetime import UTC, date, datetime, timedelta, timezone
 
 import pytest
 
-from tmdb_index_spark.operators.materialize import release_pins
+from tmdb_index_spark.operators.materialize import local_frame, release_pins
 from tmdb_index_spark.pipeline import process
 from tmdb_index_spark.schemas import (
     changes_schema,
@@ -25,7 +26,6 @@ from tmdb_index_spark.schemas import (
 )
 from tmdb_index_spark.sources.fetcher import (
     FixtureFeed,
-    _local_frame,
     changes_batch,
     export_batch,
     external_ids_batch,
@@ -88,7 +88,7 @@ _CASES = [
 @pytest.mark.parametrize("schema,data", _CASES)
 def test_local_frame_matches_list_path(spark, local_tz, schema, data):
     for batch in (data, []):
-        got = _local_frame(spark, batch, schema)
+        got = local_frame(spark, batch, schema)
         want = spark.createDataFrame(batch, schema)
         assert got.schema == want.schema == schema
         assert got.collect() == want.collect()
@@ -103,7 +103,7 @@ def test_local_frame_raises_like_the_verifier(spark):
         with pytest.raises(exc):
             spark.createDataFrame([bad], schema)
         with pytest.raises(exc):
-            _local_frame(spark, [{"id": 1, "in_export": True}, bad], schema)
+            local_frame(spark, [{"id": 1, "in_export": True}, bad], schema)
 
 
 def _leaves(df) -> list[str]:
@@ -111,21 +111,30 @@ def _leaves(df) -> list[str]:
     return [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())]
 
 
-def test_lifecycle_batches_plan_as_local_relations(spark, tmp_path):
-    """Each lifecycle batch analyzes to a ``LocalRelation``, and a whole
+def test_lifecycle_batches_plan_as_file_scans(spark, tmp_path):
+    """Each non-empty lifecycle batch analyzes to one file-scan leaf
+    (``LogicalRelation``) over a scratch file that ``release_pins``
+    deletes; the empty bootstrap frame is a ``LocalRelation``.  A whole
     bootstrap ``process`` plan has no ``LogicalRDD`` leaf (the list
     path's Python RDD), so the daily path starts no Python worker."""
     day, now = date(2024, 1, 2), datetime(2024, 1, 3, tzinfo=UTC)
     ext = [{"success": True, "id": 1, "retrieved_at": now, "imdb_numeric_id": 1,
             "wikidata_numeric_id": None}]
     empty = scan_or_empty(spark, str(tmp_path / "absent.parquet"))
-    for df in (
-        empty,
+    assert _leaves(empty) == ["LocalRelation"]
+    batches = [
         changes_batch(spark, [{"id": 1, "adult": False}], day),
         export_batch(spark, [[3, 1], [2]]),
         external_ids_batch(spark, ext, "movie"),
-    ):
-        assert _leaves(df) == ["LocalRelation"]
+    ]
+    files = []
+    for df in batches:
+        assert _leaves(df) == ["LogicalRelation"]
+        files += [f.removeprefix("file://") for f in df.inputFiles()]
+    assert len(files) == 3 and all(os.path.exists(f) for f in files)
+    assert [r.id for r in batches[1].collect()] == [1, 2, 3]
+    release_pins()
+    assert not any(os.path.exists(f) for f in files)
 
     feed = FixtureFeed(
         changes_by_day={day: [{"id": 1}, {"id": 2}]},
@@ -138,5 +147,5 @@ def test_lifecycle_batches_plan_as_local_relations(spark, tmp_path):
         assert out.count() == 3
     finally:
         release_pins()
-    assert "LocalRelation" in leaves
+    assert "LogicalRelation" in leaves
     assert "LogicalRDD" not in leaves, leaves

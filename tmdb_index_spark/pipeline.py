@@ -32,7 +32,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tmdb_index_spark.operators.materialize import pin_frame
+from tmdb_index_spark.operators.materialize import local_frame, pin_frame
 from tmdb_index_spark.operators.selection import (
     select_backfill_candidates,
     select_refresh_candidates,
@@ -43,7 +43,6 @@ from tmdb_index_spark.schemas import changes_schema
 from tmdb_index_spark.sources.fetcher import (
     CHANGES_EPOCH,
     TmdbFeed,
-    _local_frame,
     export_batch,
     external_ids_batch,
 )
@@ -108,9 +107,9 @@ def insert_latest_changes(
     # pass that the per-day builder uses within a day: later day / later
     # arrival wins per id (reference folds one update_or_append per day,
     # tmdb_index.py:248-254 — same fixpoint).  One schema'd batch then
-    # enters the plan as an Arrow-built local relation and merges in a
-    # single shuffle.  The distributed keep-last path (dedup_keep_last)
-    # remains the operator for table-sized inputs.
+    # enters the plan as a scan of a scratch parquet file (local_frame)
+    # and merges in a single shuffle.  The distributed keep-last path
+    # (dedup_keep_last) remains the operator for table-sized inputs.
     last: dict[int, dict[str, Any]] = {}
     for d in date_range:
         for r in feed.changes(entity_type, d):
@@ -119,7 +118,7 @@ def insert_latest_changes(
             last[int(r["id"])] = {"id": int(r["id"]), "adult": r.get("adult"), "date": d}
     if not last:
         return align_id_col(df)
-    batch = _local_frame(spark, list(last.values()), changes_schema())
+    batch = local_frame(spark, list(last.values()), changes_schema())
     return align_id_col(pin_frame(update_or_append(df, batch)))
 
 

@@ -4,7 +4,8 @@ Feeds are driver-side I/O behind the :class:`~tmdb_index_spark.sources.
 fetcher.TmdbFeed` interface — the reference's per-id HTTP loop is
 rate-limit-bound and order-dependent (tmdb_index.py:369-402), so it must
 NOT run in executors (SURVEY.md §3.3).  Fetched batches enter the plan
-via ``createDataFrame``.
+through :func:`~tmdb_index_spark.operators.materialize.local_frame`, as
+scans of scratch parquet files.
 """
 
 from tmdb_index_spark.sources.parquet import (

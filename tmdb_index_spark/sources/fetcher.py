@@ -10,9 +10,11 @@ previous-day fallback (tmdb_index.py:192-217,259-324,369-402).
 All feed I/O is DRIVER-side and sequential by design — the per-id
 endpoint is rate-limited and the retry state machine is order-dependent;
 parallelizing it across executors would multiply API abuse and break
-determinism (SURVEY.md §3.3).  Batches enter Spark as Arrow-built
-local relations with declared schemas (S4, :func:`_local_frame`), so
-handing them over starts no Python worker.
+determinism (SURVEY.md §3.3).  Batches enter Spark with declared
+schemas (S4) through
+:func:`~tmdb_index_spark.operators.materialize.local_frame`: a scan of
+a scratch parquet file, so handing them over starts no Python worker
+and keeps no rows in the plan.
 """
 
 from __future__ import annotations
@@ -29,12 +31,9 @@ from dataclasses import dataclass, field
 from datetime import UTC, date, datetime, timedelta
 from typing import Any, Protocol
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import _make_type_verifier
 
+from tmdb_index_spark.operators.materialize import local_frame
 from tmdb_index_spark.schemas import (
     UINT32_MAX,
     changes_schema,
@@ -147,41 +146,6 @@ def parse_external_ids_payload(
 # ---------------------------------------------------------------------------
 
 
-def _local_frame(
-    spark: SparkSession, rows: Sequence[Mapping[str, Any]], schema: T.StructType
-) -> DataFrame:
-    """Driver-resident rows (dicts keyed by field name) as a DataFrame
-    over a ``LocalRelation``.
-
-    ``spark.createDataFrame(rows, schema)`` pickles every row and runs a
-    Python-worker pass before the JVM unpickles them; a ``pyarrow.Table``
-    reaches the JVM as Arrow batches and plans as a ``LocalRelation``,
-    so no Python worker starts.  The list path's semantics are kept:
-    PySpark's own per-row verifier runs first (a wrong type raises
-    ``TypeError``, a null in a non-nullable field ``ValueError``), and
-    dates and timestamps go through each field's ``toInternal`` before
-    the arrays are built — the list path reads a naive datetime as local
-    time, where pyarrow would read it as UTC.  Flat schemas of atomic
-    types only (every schema in :mod:`tmdb_index_spark.schemas`).
-
-    The rows live in the plan: each plan that contains the relation is
-    optimized over them on the driver, about 1.2 s per plan at 1M rows
-    on 4 vCPUs.
-    """
-    verify = _make_type_verifier(schema)
-    for r in rows:
-        verify(r)
-    arrow_schema = to_arrow_schema(schema)
-    columns = []
-    for f, af in zip(schema.fields, arrow_schema):
-        values = [r.get(f.name) for r in rows]
-        if f.needConversion():
-            values = [f.toInternal(v) for v in values]
-        columns.append(pa.array(values, type=af.type))
-    table = pa.Table.from_arrays(columns, schema=arrow_schema)
-    return spark.createDataFrame(table, schema)
-
-
 def changes_batch(
     spark: SparkSession, rows: Iterable[Mapping[str, Any]], day: date
 ) -> DataFrame:
@@ -190,7 +154,7 @@ def changes_batch(
     tmdb_index.py:209-215).  The keep-last dedup happens driver-side —
     the batch is feed-sized (thousands of rows), so a dict fold is both
     faithful to arrival order and cheaper than a Spark window.  The batch
-    enters as an Arrow-built local relation (:func:`_local_frame`)."""
+    enters as a scratch parquet scan (:func:`local_frame`)."""
     last: dict[int, Mapping[str, Any]] = {}
     for r in rows:
         if r.get("id") is None:
@@ -199,7 +163,7 @@ def changes_batch(
     data = [
         {"id": i, "adult": r.get("adult"), "date": day} for i, r in last.items()
     ]
-    return _local_frame(spark, data, changes_schema())
+    return local_frame(spark, data, changes_schema())
 
 
 def export_batch(
@@ -211,24 +175,24 @@ def export_batch(
     tmdb_index.py:330-348).  Dedup is driver-side for the same reason as
     :func:`changes_batch` (export is ~1M ints — trivially driver-sized;
     at true scale this becomes a parquet/JSONL scan + dedup_keep_first).
-    The batch enters as an Arrow-built local relation
-    (:func:`_local_frame`)."""
+    The batch enters as a scratch parquet scan (:func:`local_frame`), so
+    the 1M rows are neither pickled nor kept in the plan."""
     seen: dict[int, None] = {}
     for ids in ids_by_priority:
         for i in ids:
             if i not in seen:
                 seen[i] = None
     data = [{"id": i, "in_export": True} for i in sorted(seen)]
-    return _local_frame(spark, data, export_schema())
+    return local_frame(spark, data, export_schema())
 
 
 def external_ids_batch(
     spark: SparkSession, rows: Sequence[Mapping[str, Any]], entity_type: str
 ) -> DataFrame:
     """External-ids responses as a schema'd DataFrame (reference
-    tmdb_index.py:534), entering as an Arrow-built local relation
-    (:func:`_local_frame`); keys outside the schema are ignored."""
-    return _local_frame(spark, rows, external_ids_schema(entity_type))
+    tmdb_index.py:534), entering as a scratch parquet scan
+    (:func:`local_frame`); keys outside the schema are ignored."""
+    return local_frame(spark, rows, external_ids_schema(entity_type))
 
 
 # ---------------------------------------------------------------------------

@@ -20,8 +20,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from tmdb_index_spark.operators.materialize import local_frame
 from tmdb_index_spark.schemas import empty_index_schema
-from tmdb_index_spark.sources.fetcher import _local_frame
 
 __all__ = ["scan_or_empty", "write_index", "write_single_parquet"]
 
@@ -31,10 +31,11 @@ def scan_or_empty(
 ) -> DataFrame:
     """Read the index if present, else an empty bootstrap frame
     (reference tmdb_index.py:668-673: fresh runs start from ``{id}``),
-    built as an Arrow local relation like the feed batches."""
+    built by :func:`~tmdb_index_spark.operators.materialize.local_frame`
+    like the feed batches."""
     if os.path.exists(path):
         return spark.read.parquet(path)
-    return _local_frame(spark, [], schema or empty_index_schema())
+    return local_frame(spark, [], schema or empty_index_schema())
 
 
 def write_index(
