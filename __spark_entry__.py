@@ -35,8 +35,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
     """DuckDB-runnable ANSI SQL equivalent for each query. Includes the
     dynamic oracles (fitted-centroid literals computed from the tables
-    the driver compares against); a builder that cannot read its table
-    simply leaves that query rows-only.
+    each oracle is checked against).  A builder whose table file is
+    missing returns None and leaves that query rows-only; any other
+    builder error (a corrupt table, say) propagates from the builder,
+    and ``dynamic_oracles`` skips that query, so it has no oracle.
 
     The dynamic oracles are scale-specific: their centroid literals
     are re-fit per ``sf_dir``, resolved as the explicit argument, then

@@ -290,9 +290,11 @@ def test_grouped_gini_plan_no_data_join_and_bucket_window(spark):
     assert plan.count("SortMergeJoin") == 0
     assert "__bkt__" in plan
 
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(repo, "tools"))
     from window_lint import audit_window_funnels
 
     g = grouped_gini(

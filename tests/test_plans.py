@@ -14,11 +14,16 @@ it) is a performance regression even while results stay correct:
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
 
 from tmdb_index_spark import queries as Q
+
+#: this checkout's root and its tools/ — the tests lint their own sources
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOOLS = os.path.join(REPO, "tools")
 
 SF = "/root/testdata/sf0.001"
 
@@ -899,7 +904,7 @@ def test_window_funnel_lint_catches_the_naive_shapes(spark):
     # rank over per-customer rollups) and pass bounded windows.
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from window_lint import audit_window_funnels
     from pyspark.sql import functions as F, Window
 
@@ -952,7 +957,7 @@ def test_catalog_window_funnel_lint(spark):
     # unledgered localCheckpoint would survive every standing gate).
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from pin_lint import build_pin_leaks, reset_session_pins
     from window_lint import audit_window_funnels
 
@@ -983,7 +988,7 @@ def test_window_lint_judges_through_leaked_cache(spark):
     # scan. Before the fix this exact sequence flipped the gate red.
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from pin_lint import reset_session_pins
     from window_lint import audit_window_funnels
 
@@ -1004,7 +1009,7 @@ def test_pin_lint_teeth(spark):
     # → no leak; an UNLEDGERED localCheckpoint survives it → flagged.
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from pin_lint import build_pin_leaks, reset_session_pins
 
     from tmdb_index_spark.operators.materialize import (
@@ -1080,7 +1085,7 @@ def test_oracle_order_lint_catches_tying_order_by():
     # bit supplier_busy_intervals at sf0.1 (round-8 VERDICT #1).
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from oracle_order_lint import audit_oracle_order_keys
 
     tying = {
@@ -1134,8 +1139,8 @@ def test_catalog_oracle_order_lint():
     # gate against cross-pass tie instability in the DuckDB oracles.
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, TOOLS)
+    sys.path.insert(0, REPO)
     from oracle_order_lint import audit_oracle_order_keys, WAIVERS
     import __spark_entry__ as entry
 
@@ -1264,10 +1269,10 @@ def test_streaming_order_lint_passes_and_has_teeth(tmp_path):
     # marker), and an undocumented call site must be flagged.
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from streaming_order_lint import lint
 
-    assert lint("/root/repo/tmdb_index_spark/streaming") == []
+    assert lint(os.path.join(REPO, "tmdb_index_spark", "streaming")) == []
     bad = tmp_path / "streamingmod"
     bad.mkdir()
     (bad / "newfold.py").write_text(
@@ -1293,6 +1298,30 @@ def test_dynamic_oracle_builder_missing_table_returns_rows_only(name):
     fallback contract; this walk catches it at registration."""
     build = Q.DYNAMIC_ORACLE_BUILDERS[name]
     assert build("/nonexistent/sf_dir_regime_guard") is None
+
+
+@pytest.fixture(scope="module")
+def corrupt_sf_dir(tmp_path_factory):
+    """An sf dir whose embeddings and documents files are not parquet."""
+    d = tmp_path_factory.mktemp("corrupt_sf")
+    for table in ("embeddings", "documents"):
+        (d / f"{table}.parquet").write_bytes(b"not a parquet file")
+    return str(d)
+
+
+@pytest.mark.parametrize("name", sorted(Q.DYNAMIC_ORACLE_BUILDERS))
+def test_dynamic_oracle_builder_corrupt_table_raises(name, corrupt_sf_dir):
+    """Only a MISSING table degrades to rows-only: any other read error
+    (here a file that is not parquet) propagates from the builder, and
+    ``dynamic_oracles`` skips that query — ``oracle_sql()`` relies on
+    the skip, and ``tools/check_oracle.py`` then names the error."""
+    import duckdb
+
+    with pytest.raises(duckdb.Error):
+        Q.DYNAMIC_ORACLE_BUILDERS[name](corrupt_sf_dir)
+    assert not set(Q.dynamic_oracles(corrupt_sf_dir)) & set(
+        Q.DYNAMIC_ORACLE_BUILDERS
+    )
 
 
 @pytest.fixture(scope="module")

@@ -424,59 +424,19 @@ def _fitted_ingest_semantic_oracle_sql(
     ``embeddings ⋈ index docs``), embeds both as literals, and scores
     batch-survivor × same-cell index pairs by SDC (codebook×codebook
     dot join — every similarity is m lookups, the engine's shape)."""
-    m, ks, threshold = 8, 16, 0.4
-    try:
-        import duckdb
-        import numpy as np
-
-        from tmdb_index_spark.operators.similarity import (
-            SEMANTIC_TWO_LEVEL_CELLS,
-            fit_kmeans_array,
-            fit_pq_array,
-            semantic_cells,
-        )
-
-        con = duckdb.connect()
-        epath = f"{sf_dir}/embeddings.parquet"
-        dpath = f"{sf_dir}/documents.parquet"
-        idx_emb_sql = (
-            f"SELECT e.vec_id, e.embedding FROM '{epath}' e "
-            f"JOIN '{dpath}' d ON e.vec_id = d.doc_id "
-            "WHERE d.doc_id % 7 <> 3"
-        )
-        n_idx = con.sql(
-            f"SELECT COUNT(*) FROM ({idx_emb_sql})"
-        ).fetchone()[0]
-        if not n_idx:
-            return None
-        cells = semantic_cells(n_idx)
-        # flat-regime guard (the _fitted_semantic_* convention): the
-        # engine's fit_centroids is the flat path here by construction,
-        # but the 10k fit cap still applies
-        if cells > SEMANTIC_TWO_LEVEL_CELLS or cells > 10_000:
-            return None
-        sample = con.sql(
-            f"SELECT embedding FROM ({idx_emb_sql}) "
-            "ORDER BY vec_id LIMIT 10000"
-        ).fetchall()
-        X = np.array([list(r[0]) for r in sample], dtype="float64")
-        cents = fit_kmeans_array(X, cells)
-        books = fit_pq_array(X, m=m, ks=ks)
-    except Exception:  # noqa: BLE001 — missing table → rows-only row
+    fit = _oracle_fit(
+        sf_dir,
+        _semantic_flat_cells,
+        pq=True,
+        rel_sql="SELECT e.vec_id, e.embedding "
+        f"FROM '{sf_dir}/embeddings.parquet' e "
+        f"JOIN '{sf_dir}/documents.parquet' d ON e.vec_id = d.doc_id "
+        "WHERE d.doc_id % 7 <> 3",
+    )
+    if fit is None:
         return None
-    dim = X.shape[1]
-    sub = dim // m
-    cent_values = ",\n    ".join(
-        "({}, [{}])".format(cid, ", ".join(repr(float(x)) for x in vec))
-        for cid, vec in cents
-    )
-    cb_values = ",\n    ".join(
-        "({}, {}, [{}])".format(
-            j, code, ", ".join(repr(float(x)) for x in vec)
-        )
-        for j, book in enumerate(books)
-        for code, vec in book
-    )
+    dim, cents, books = fit
+    sub = dim // 8
     return (
         _INGEST_STAGES_SQL
         + f""", s3ids AS (
@@ -489,93 +449,14 @@ def _fitted_ingest_semantic_oracle_sql(
 ), bv AS (
   SELECT e.vec_id, e.embedding::DOUBLE[] AS v
   FROM embeddings e JOIN s3ids s ON e.vec_id = s.doc_id
-), cent AS (SELECT * FROM (VALUES
-    {cent_values}
-) AS t(cell, cv)),
-ai AS (
-  SELECT vec_id, v, CAST(cell AS BIGINT) AS cell FROM (
-    SELECT iv.vec_id, iv.v, cent.cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY iv.vec_id
-             ORDER BY list_sum(list_transform(generate_series(1, {dim}),
-                       i -> (v[i] - cv[i]) * (v[i] - cv[i]))) ASC,
-                      cent.cell ASC) AS rn
-    FROM iv CROSS JOIN cent
-  ) WHERE rn = 1
 ),
-ab AS (
-  SELECT vec_id, v, CAST(cell AS BIGINT) AS cell FROM (
-    SELECT bv.vec_id, bv.v, cent.cell,
-           ROW_NUMBER() OVER (
-             PARTITION BY bv.vec_id
-             ORDER BY list_sum(list_transform(generate_series(1, {dim}),
-                       i -> (v[i] - cv[i]) * (v[i] - cv[i]))) ASC,
-                      cent.cell ASC) AS rn
-    FROM bv CROSS JOIN cent
-  ) WHERE rn = 1
-),
-cb AS (SELECT * FROM (VALUES
-    {cb_values}
-) AS t(sub, code, cbv)),
-ci AS (
-  SELECT vec_id, sub, code FROM (
-    SELECT a.vec_id, cb.sub, cb.code,
-           ROW_NUMBER() OVER (
-             PARTITION BY a.vec_id, cb.sub
-             ORDER BY list_sum(list_transform(generate_series(1, {sub}),
-                       i -> (a.v[cb.sub * {sub} + i] - cb.cbv[i])
-                          * (a.v[cb.sub * {sub} + i] - cb.cbv[i]))) ASC,
-                      cb.code ASC) AS rn
-    FROM ai a CROSS JOIN cb
-  ) WHERE rn = 1
-),
-cbb AS (
-  SELECT vec_id, sub, code FROM (
-    SELECT b.vec_id, cb.sub, cb.code,
-           ROW_NUMBER() OVER (
-             PARTITION BY b.vec_id, cb.sub
-             ORDER BY list_sum(list_transform(generate_series(1, {sub}),
-                       i -> (b.v[cb.sub * {sub} + i] - cb.cbv[i])
-                          * (b.v[cb.sub * {sub} + i] - cb.cbv[i]))) ASC,
-                      cb.code ASC) AS rn
-    FROM ab b CROSS JOIN cb
-  ) WHERE rn = 1
-),
-pd AS (
-  SELECT a.sub, a.code AS ca, b.code AS cb2,
-         list_sum(list_transform(generate_series(1, {sub}),
-           i -> a.cbv[i] * b.cbv[i])) AS dot
-  FROM cb a JOIN cb b ON a.sub = b.sub
-),
-cbn AS (SELECT sub, code,
-               list_sum(list_transform(cbv, x -> x * x)) AS n2 FROM cb),
-ni AS (
-  SELECT c.vec_id, SQRT(SUM(n.n2)) AS nrm
-  FROM ci c JOIN cbn n ON n.sub = c.sub AND n.code = c.code
-  GROUP BY 1
-),
-nbn AS (
-  SELECT c.vec_id, SQRT(SUM(n.n2)) AS nrm
-  FROM cbb c JOIN cbn n ON n.sub = c.sub AND n.code = c.code
-  GROUP BY 1
-),
-adot AS (
-  SELECT b.vec_id AS bid, a.vec_id AS iid, SUM(p.dot) AS adot
-  FROM ai a
-  JOIN ab b ON a.cell = b.cell
-  JOIN ci ca ON ca.vec_id = a.vec_id
-  JOIN cbb cb2 ON cb2.vec_id = b.vec_id AND cb2.sub = ca.sub
-  JOIN pd p ON p.sub = ca.sub AND p.ca = ca.code AND p.cb2 = cb2.code
-  GROUP BY 1, 2
-),
-semdup AS (
-  SELECT DISTINCT d.bid AS doc_id
-  FROM adot d
-  JOIN ni na ON na.vec_id = d.iid
-  JOIN nbn nb2 ON nb2.vec_id = d.bid
-  WHERE na.nrm > 0 AND nb2.nrm > 0
-    AND ROUND(d.adot / (na.nrm * nb2.nrm), 4) >= {threshold}
-),
+{_values_cte("cent", "cell, cv", cents)},
+{_assign_sql(dim, "ai", "iv CROSS JOIN cent")},
+{_assign_sql(dim, "ab", "bv CROSS JOIN cent")},
+{_codebook_sql(books)},
+{_pq_encode_sql(sub, "ai")},
+{_pq_encode_sql(sub, "ab")},
+{_sdc_pairs_sql(sub, "ai", "ab", "", 0.4)},
 lab AS (
   SELECT b0.doc_id, b0.source,
          s1.doc_id IS NOT NULL AS in1,
@@ -587,7 +468,8 @@ lab AS (
   LEFT JOIN s1 ON b0.doc_id = s1.doc_id
   LEFT JOIN s2 ON b0.doc_id = s2.doc_id
   LEFT JOIN dup ON b0.doc_id = dup.batch_id
-  LEFT JOIN semdup ON b0.doc_id = semdup.doc_id
+  LEFT JOIN (SELECT DISTINCT id_b AS doc_id FROM sdc_pairs) semdup
+    ON b0.doc_id = semdup.doc_id
 )
 SELECT source,
        COUNT(*)::BIGINT AS n_batch,
@@ -795,6 +677,224 @@ SELECT query_id, neighbor_id, cos_sim, rank FROM (
 """
 
 
+# ---------------------------------------------------------------------------
+# Fitted-literal oracle helpers. Each DYNAMIC_ORACLE_BUILDERS entry reads
+# the engine's bounded fit sample, re-runs the shared numpy fit on it and
+# embeds the fit as VALUES literals in plain SQL built from these parts.
+# ---------------------------------------------------------------------------
+
+_V_CTE = "WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"
+
+
+def _oracle_sample(sf_dir: str, rel_sql: str | None = None):
+    """``(n, X)``: the row count of the relation ``rel_sql`` (default:
+    the embeddings table) and the engine's fit sample from it — the
+    first 10,000 embeddings by ``vec_id`` as a float64 matrix.  None
+    when the relation is empty or a table file is missing (the query
+    then stays rows-only); any other error propagates."""
+    import duckdb
+    import numpy as np
+
+    rel = f"({rel_sql})" if rel_sql else f"'{sf_dir}/embeddings.parquet'"
+    with duckdb.connect() as con:
+        try:
+            n = con.sql(f"SELECT COUNT(*) FROM {rel}").fetchone()[0]
+        except duckdb.IOException:  # no file matches the table path
+            return None
+        if not n:
+            return None
+        rows = con.sql(
+            f"SELECT embedding FROM {rel} ORDER BY vec_id LIMIT 10000"
+        ).fetchall()
+    return n, np.array([list(r[0]) for r in rows], dtype="float64")
+
+
+def _values_cte(name: str, cols: str, rows) -> str:
+    """CTE ``name(cols)`` over literal rows, one per line.  A vector
+    cell (a fitted centroid or code word) spells each coordinate as
+    ``repr(float)``, the exact float64 the fit produced; a str cell is
+    quoted; any other cell is written as ``str``."""
+
+    def cell(x) -> str:
+        if isinstance(x, str):
+            return f"'{x}'"
+        if hasattr(x, "__len__"):
+            return "[{}]".format(", ".join(repr(float(c)) for c in x))
+        return str(x)
+
+    body = ",\n    ".join(
+        "({})".format(", ".join(map(cell, row))) for row in rows
+    )
+    return f"{name} AS (SELECT * FROM (VALUES\n    {body}\n) AS t({cols}))"
+
+
+def _assign_sql(
+    dim: int, name: str = "assigned", pairs: str = "v CROSS JOIN cent"
+) -> str:
+    """Nearest-centroid CTEs over ``pairs`` (columns ``vec_id, v`` and
+    ``cell, cv``): ``{name}_ranked`` ranks each vector's cells by
+    (squared distance, cell) — the operator's argmin tie-break — and
+    ``{name}`` keeps each vector's home cell.  A multi-probe query side
+    reads ``{name}_ranked WHERE rn <= nprobe``."""
+    return f"""{name}_ranked AS (
+  SELECT vec_id, v, CAST(cell AS BIGINT) AS cell,
+         ROW_NUMBER() OVER (PARTITION BY vec_id
+                            ORDER BY dist ASC, cell ASC) AS rn
+  FROM (
+    SELECT vec_id, v, cell,
+           list_sum(list_transform(generate_series(1, {dim}),
+             i -> (v[i] - cv[i]) * (v[i] - cv[i]))) AS dist
+    FROM {pairs}
+  )
+),
+{name} AS (SELECT vec_id, v, cell FROM {name}_ranked WHERE rn = 1)"""
+
+
+def _codebook_sql(books) -> str:
+    """The PQ codebooks as literal table ``cb(sub, code, cbv)`` plus
+    each code word's squared norm ``cbn(sub, code, n2)``."""
+    rows = [
+        (j, code, vec) for j, book in enumerate(books) for code, vec in book
+    ]
+    return f"""{_values_cte("cb", "sub, code, cbv", rows)},
+cbn AS (SELECT sub, code,
+               list_sum(list_transform(cbv, x -> x * x)) AS n2 FROM cb)"""
+
+
+def _pq_encode_sql(sub: int, src: str = "assigned") -> str:
+    """PQ-encode CTEs over ``src(vec_id, v)``: ``{src}_codes(vec_id,
+    sub, code)``, each subvector's nearest code word by (squared
+    distance, code), and ``{src}_norm(vec_id, nrm)``, the norm of the
+    decoded vector."""
+    return f"""{src}_cdist AS (
+  SELECT a.vec_id, cb.sub, cb.code,
+         list_sum(list_transform(generate_series(1, {sub}),
+           i -> (a.v[cb.sub * {sub} + i] - cb.cbv[i])
+              * (a.v[cb.sub * {sub} + i] - cb.cbv[i]))) AS dist
+  FROM {src} a CROSS JOIN cb
+),
+{src}_codes AS (
+  SELECT vec_id, sub, code FROM (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, sub
+                                 ORDER BY dist ASC, code ASC) AS rn
+    FROM {src}_cdist
+  ) WHERE rn = 1
+),
+{src}_norm AS (
+  SELECT c.vec_id, SQRT(SUM(n.n2)) AS nrm
+  FROM {src}_codes c JOIN cbn n ON n.sub = c.sub AND n.code = c.code
+  GROUP BY 1
+)"""
+
+
+def _sdc_pairs_sql(sub: int, a: str, b: str, on: str, threshold: float) -> str:
+    """``sdc_pairs(id_a, id_b)``: same-cell pairs of ``a`` × ``b``
+    (plus the join condition ``on``) whose symmetric-distance cosine —
+    m codebook×codebook dot lookups over the two code words, the
+    engine's shape — rounds to at least ``threshold``."""
+    return f"""pd AS (
+  SELECT a.sub, a.code AS ca, b.code AS cb2,
+         list_sum(list_transform(generate_series(1, {sub}),
+           i -> a.cbv[i] * b.cbv[i])) AS dot
+  FROM cb a JOIN cb b ON a.sub = b.sub
+),
+adot AS (
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b, SUM(p.dot) AS adot
+  FROM {a} a
+  JOIN {b} b ON a.cell = b.cell{on}
+  JOIN {a}_codes ca ON ca.vec_id = a.vec_id
+  JOIN {b}_codes cb2 ON cb2.vec_id = b.vec_id AND cb2.sub = ca.sub
+  JOIN pd p ON p.sub = ca.sub AND p.ca = ca.code AND p.cb2 = cb2.code
+  GROUP BY 1, 2
+),
+sdc_pairs AS (
+  SELECT d.id_a, d.id_b
+  FROM adot d
+  JOIN {a}_norm na ON na.vec_id = d.id_a
+  JOIN {b}_norm nb ON nb.vec_id = d.id_b
+  WHERE na.nrm > 0 AND nb.nrm > 0
+    AND ROUND(d.adot / (na.nrm * nb.nrm), 4) >= {threshold}
+)"""
+
+
+#: SemDeDup's election over ``assigned``: a vector drops iff a
+#: smaller-id cell-mate has rounded cosine >= 0.4.
+_SEMDEDUP_DROPPED_SQL = f"""dropped AS (
+  SELECT DISTINCT c.vec_id
+  FROM assigned q JOIN assigned c ON q.cell = c.cell AND q.vec_id < c.vec_id
+  WHERE {_COS_SQL} >= 0.4
+)"""
+
+
+def _top3_sql(score: str) -> str:
+    """Top-3 tail over ``scored(query_id, neighbor_id, {score})``:
+    ties break on the lower neighbor id."""
+    return f"""SELECT query_id, neighbor_id, {score}, rank FROM (
+  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                               ORDER BY {score} DESC, neighbor_id ASC)::BIGINT AS rank
+  FROM scored
+) WHERE rank <= 3
+"""
+
+
+def _ivf_top3_sql(nprobe: int) -> str:
+    """Cosine top-3 over ``assigned``: each query scores the vectors
+    homed in its ``nprobe`` nearest cells."""
+    return f"""scored AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {_COS_SQL} AS cos_sim
+  FROM assigned_ranked q JOIN assigned c ON q.cell = c.cell
+  WHERE q.rn <= {nprobe} AND q.vec_id <> c.vec_id
+)
+{_top3_sql("cos_sim")}"""
+
+
+def _oracle_fit(
+    sf_dir: str, cells, pq: bool = False, rel_sql: str | None = None
+):
+    """``(dim, cents, books)``: the engine's k-means fit on
+    ``cells(n)`` cells of :func:`_oracle_sample`'s sample, plus its
+    8 × 16 PQ codebooks when ``pq``.  None when there is no sample,
+    when ``cells(n)`` is None (the corpus is outside the regime the
+    oracle mirrors), or when ``pq`` and the dimension does not split
+    into 8 subspaces (a corpus the PQ operators reject)."""
+    from tmdb_index_spark.operators.similarity import (
+        fit_kmeans_array,
+        fit_pq_array,
+    )
+
+    sample = _oracle_sample(sf_dir, rel_sql)
+    if sample is None:
+        return None
+    n, X = sample
+    k = cells(n)
+    if k is None or (pq and X.shape[1] % 8):
+        return None
+    books = fit_pq_array(X, m=8, ks=16) if pq else None
+    return X.shape[1], fit_kmeans_array(X, k), books
+
+
+def _flat_cells(n: int) -> int:
+    """The flat IVF entry points' ``round(√N)`` cells."""
+    return max(1, round(n ** 0.5))
+
+
+def _semantic_flat_cells(n: int) -> int | None:
+    """The SemDeDup operators' occupancy-constant ``semantic_cells(n)``,
+    or None past the flat k-means regime (cells above
+    ``SEMANTIC_TWO_LEVEL_CELLS`` or the 10k fit cap), where the engine
+    routes to two-level or sign-bit cells and a flat-fit oracle would
+    diverge."""
+    from tmdb_index_spark.operators.similarity import (
+        SEMANTIC_TWO_LEVEL_CELLS,
+        semantic_cells,
+    )
+
+    cells = semantic_cells(n)
+    if cells > SEMANTIC_TWO_LEVEL_CELLS or cells > 10_000:
+        return None
+    return cells
+
+
 #: Deterministic IVF centroids for the catalog query: 8 axis-aligned
 #: unit vectors in the 64-dim embedding space. A production index fits
 #: these with sampled k-means; the operator (assign + in-cell search) is
@@ -871,69 +971,22 @@ def embedding_ivf_tuned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fitted_ivf_oracle_sql(sf_dir: str = "/root/testdata/sf0.01") -> str | None:
-    """Value-row oracle for ``embedding_ivf_tuned_topk``: reproduce the
-    deterministic centroid fit OUTSIDE Spark (duckdb parquet read of
-    the same first-``max_sample``-by-id sample + the shared
-    :func:`fit_kmeans_array` numpy core, same seed), then emit plain
-    SQL with the fitted centroids as literals — assignment is argmin
-    over a literal centroid table with the (dist, cell) tie-break the
-    operator uses. Returns None when the table is unreadable (the
-    driver then records the rows-only fallback)."""
-    try:
-        import duckdb
-        import numpy as np
+    """Value-row oracle for ``embedding_ivf_tuned_topk``: the engine's
+    √N-cell k-means fit re-run on its parquet sample, centroids as
+    literals, argmin assignment and within-cell cosine top-3 in SQL."""
+    return _flat_ivf_oracle_sql(sf_dir, nprobe=1)
 
-        from tmdb_index_spark.operators.similarity import fit_kmeans_array
 
-        con = duckdb.connect()
-        path = f"{sf_dir}/embeddings.parquet"
-        n = con.sql(f"SELECT COUNT(*) FROM '{path}'").fetchone()[0]
-        if not n:
-            return None
-        sample = con.sql(
-            f"SELECT embedding FROM '{path}' ORDER BY vec_id LIMIT 10000"
-        ).fetchall()
-        X = np.array([list(r[0]) for r in sample], dtype="float64")
-        cells = max(1, round(n ** 0.5))
-        cents = fit_kmeans_array(X, cells)
-    except Exception:  # noqa: BLE001 — missing table → rows-only row
+def _flat_ivf_oracle_sql(sf_dir: str, nprobe: int) -> str | None:
+    fit = _oracle_fit(sf_dir, _flat_cells)
+    if fit is None:
         return None
-    dim = X.shape[1]
-    values = ",\n    ".join(
-        "({}, [{}])".format(
-            cid, ", ".join(repr(float(x)) for x in vec)
-        )
-        for cid, vec in cents
-    )
+    dim, cents, _ = fit
     return f"""
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-cent AS (SELECT * FROM (VALUES
-    {values}
-) AS t(cell, cv)),
-d AS (
-  SELECT vec_id, v, cell,
-         list_sum(list_transform(generate_series(1, {dim}),
-           i -> (v[i] - cv[i]) * (v[i] - cv[i]))) AS dist
-  FROM v CROSS JOIN cent
-),
-assigned AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY dist ASC, cell ASC) AS rn
-    FROM d
-  ) WHERE rn = 1
-),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {_COS_SQL} AS cos_sim
-  FROM assigned q JOIN assigned c ON q.cell = c.cell
-  WHERE q.vec_id <> c.vec_id
-)
-SELECT query_id, neighbor_id, cos_sim, rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id ASC)::BIGINT AS rank
-  FROM scored
-) WHERE rank <= 3
-"""
+{_V_CTE},
+{_values_cte("cent", "cell, cv", cents)},
+{_assign_sql(dim)},
+{_ivf_top3_sql(nprobe)}"""
 
 
 def embedding_ivf2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -954,97 +1007,40 @@ def embedding_ivf2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fitted_ivf2_oracle_sql(sf_dir: str = "/root/testdata/sf0.01") -> str | None:
-    """Value-row oracle for ``embedding_ivf2_topk``: rerun the
-    deterministic two-level fit from the same parquet sample, embed
-    coarse + fine centroid tables (with fine→coarse membership) as
-    literals, and express the two-stage assignment — each vector's 2
-    nearest coarse cells by (dist, ccell), then argmin (dist, cell)
-    over the probed cells' fine members — in plain SQL."""
-    probe_coarse = 2
-    try:
-        import duckdb
-        import numpy as np
+    """Value-row oracle for ``embedding_ivf2_topk``: the engine's
+    two-level fit re-run on its parquet sample, coarse and fine
+    centroids (with fine→coarse membership) as literals; each vector's
+    2 nearest coarse cells by (dist, cell), then argmin (dist, cell)
+    over those cells' fine members, in SQL."""
+    return _ivf2_oracle_sql(sf_dir, nprobe=1)
 
-        from tmdb_index_spark.operators.similarity import (
-            two_level_from_sample,
-        )
 
-        con = duckdb.connect()
-        path = f"{sf_dir}/embeddings.parquet"
-        n = con.sql(f"SELECT COUNT(*) FROM '{path}'").fetchone()[0]
-        if not n:
-            return None
-        sample = con.sql(
-            f"SELECT embedding FROM '{path}' ORDER BY vec_id LIMIT 10000"
-        ).fetchall()
-        X = np.array([list(r[0]) for r in sample], dtype="float64")
-        cells = max(1, min(round(n ** (2.0 / 3.0)), 10_000))
-        coarse = max(1, round(cells ** 0.5))
-        cc, fine, f2c = two_level_from_sample(X, cells, coarse)
-    except Exception:  # noqa: BLE001
+def _ivf2_oracle_sql(sf_dir: str, nprobe: int) -> str | None:
+    from tmdb_index_spark.operators.similarity import two_level_from_sample
+
+    sample = _oracle_sample(sf_dir)
+    if sample is None:
         return None
-    dim = X.shape[1]
+    n, X = sample
+    cells = max(1, min(round(n ** (2.0 / 3.0)), 10_000))
+    coarse_cells = max(1, round(cells ** 0.5))
+    cc, fine, f2c = two_level_from_sample(X, cells, coarse_cells)
     # only POPULATED coarse cells are probe candidates (mirrors
     # two_level_ivf_assign: a probed-but-empty cell would drop the
     # vector from the membership join here while Spark must still
     # assign it)
     used = set(f2c.values())
-    cvals = ",\n    ".join(
-        "({}, [{}])".format(cid, ", ".join(repr(float(x)) for x in vec))
-        for cid, vec in cc
-        if int(cid) in used
-    )
-    fvals = ",\n    ".join(
-        "({}, {}, [{}])".format(
-            fid, f2c[int(fid)], ", ".join(repr(float(x)) for x in vec)
-        )
-        for fid, vec in fine
-    )
+    coarse = [(cid, vec) for cid, vec in cc if int(cid) in used]
+    fine = [(fid, f2c[int(fid)], vec) for fid, vec in fine]
+    dim = X.shape[1]
     return f"""
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-ccent AS (SELECT * FROM (VALUES
-    {cvals}
-) AS t(ccell, ccv)),
-fcent AS (SELECT * FROM (VALUES
-    {fvals}
-) AS t(cell, ccell, cv)),
-dc AS (
-  SELECT vec_id, v, ccell,
-         list_sum(list_transform(generate_series(1, {dim}),
-           i -> (v[i] - ccv[i]) * (v[i] - ccv[i]))) AS cdist
-  FROM v CROSS JOIN ccent
-),
-probed AS (
-  SELECT vec_id, v, ccell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist ASC, ccell ASC) AS pr
-    FROM dc
-  ) WHERE pr <= {probe_coarse}
-),
-df_ AS (
-  SELECT p.vec_id, p.v, f.cell,
-         list_sum(list_transform(generate_series(1, {dim}),
-           i -> (p.v[i] - f.cv[i]) * (p.v[i] - f.cv[i]))) AS dist
-  FROM probed p JOIN fcent f ON f.ccell = p.ccell
-),
-assigned AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY dist ASC, cell ASC) AS rn
-    FROM df_
-  ) WHERE rn = 1
-),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {_COS_SQL} AS cos_sim
-  FROM assigned q JOIN assigned c ON q.cell = c.cell
-  WHERE q.vec_id <> c.vec_id
-)
-SELECT query_id, neighbor_id, cos_sim, rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id ASC)::BIGINT AS rank
-  FROM scored
-) WHERE rank <= 3
-"""
+{_V_CTE},
+{_values_cte("ccent", "cell, cv", coarse)},
+{_values_cte("fcent", "cell, ccell, cv", fine)},
+{_assign_sql(dim, "coarse", "v CROSS JOIN ccent")},
+probed AS (SELECT vec_id, v, cell AS ccell FROM coarse_ranked WHERE rn <= 2),
+{_assign_sql(dim, "assigned", "probed JOIN fcent USING (ccell)")},
+{_ivf_top3_sql(nprobe)}"""
 
 
 def embedding_ivf2_multiprobe_tuned(
@@ -1075,93 +1071,9 @@ def _fitted_ivf2_multiprobe_oracle_sql(
     sf_dir: str = "/root/testdata/sf0.01",
 ) -> str | None:
     """Value-row oracle for ``embedding_ivf2_multiprobe_tuned``: the
-    :func:`_fitted_ivf2_oracle_sql` recipe (same parquet sample, same
-    two-level numpy fit, coarse + fine centroid literals, two-stage
-    fold distances) with the multi-probe query side — every vector
-    joins as a QUERY from its two nearest probed fine cells (fine
-    probe rank <= 2) against CANDIDATES in their single home cell
-    (rank 1)."""
-    probe_coarse, nprobe = 2, 2
-    try:
-        import duckdb
-        import numpy as np
-
-        from tmdb_index_spark.operators.similarity import (
-            two_level_from_sample,
-        )
-
-        con = duckdb.connect()
-        path = f"{sf_dir}/embeddings.parquet"
-        n = con.sql(f"SELECT COUNT(*) FROM '{path}'").fetchone()[0]
-        if not n:
-            return None
-        sample = con.sql(
-            f"SELECT embedding FROM '{path}' ORDER BY vec_id LIMIT 10000"
-        ).fetchall()
-        X = np.array([list(r[0]) for r in sample], dtype="float64")
-        cells = max(1, min(round(n ** (2.0 / 3.0)), 10_000))
-        coarse = max(1, round(cells ** 0.5))
-        cc, fine, f2c = two_level_from_sample(X, cells, coarse)
-    except Exception:  # noqa: BLE001 — missing table → rows-only row
-        return None
-    dim = X.shape[1]
-    used = set(f2c.values())
-    cvals = ",\n    ".join(
-        "({}, [{}])".format(cid, ", ".join(repr(float(x)) for x in vec))
-        for cid, vec in cc
-        if int(cid) in used
-    )
-    fvals = ",\n    ".join(
-        "({}, {}, [{}])".format(
-            fid, f2c[int(fid)], ", ".join(repr(float(x)) for x in vec)
-        )
-        for fid, vec in fine
-    )
-    return f"""
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-ccent AS (SELECT * FROM (VALUES
-    {cvals}
-) AS t(ccell, ccv)),
-fcent AS (SELECT * FROM (VALUES
-    {fvals}
-) AS t(cell, ccell, cv)),
-dc AS (
-  SELECT vec_id, v, ccell,
-         list_sum(list_transform(generate_series(1, {dim}),
-           i -> (v[i] - ccv[i]) * (v[i] - ccv[i]))) AS cdist
-  FROM v CROSS JOIN ccent
-),
-probed AS (
-  SELECT vec_id, v, ccell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist ASC, ccell ASC) AS pr
-    FROM dc
-  ) WHERE pr <= {probe_coarse}
-),
-df_ AS (
-  SELECT p.vec_id, p.v, f.cell,
-         list_sum(list_transform(generate_series(1, {dim}),
-           i -> (p.v[i] - f.cv[i]) * (p.v[i] - f.cv[i]))) AS dist
-  FROM probed p JOIN fcent f ON f.ccell = p.ccell
-),
-ranked AS (
-  SELECT vec_id, v, cell,
-         ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY dist ASC, cell ASC) AS rn
-  FROM df_
-),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {_COS_SQL} AS cos_sim
-  FROM (SELECT * FROM ranked WHERE rn <= {nprobe}) q
-  JOIN (SELECT * FROM ranked WHERE rn = 1) c ON q.cell = c.cell
-  WHERE q.vec_id <> c.vec_id
-)
-SELECT query_id, neighbor_id, cos_sim, rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id ASC)::BIGINT AS rank
-  FROM scored
-) WHERE rank <= 3
-"""
+    two-level IVF oracle with each query probing its two nearest fine
+    cells."""
+    return _ivf2_oracle_sql(sf_dir, nprobe=2)
 
 
 def embedding_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1213,66 +1125,8 @@ def _fitted_ivf_multiprobe_oracle_sql(
     sf_dir: str = "/root/testdata/sf0.01",
 ) -> str | None:
     """Value-row oracle for ``embedding_ivf_multiprobe_tuned``: the
-    :func:`_fitted_ivf_oracle_sql` recipe (same parquet sample, same
-    numpy k-means core, same seed, centroids as literals) with the
-    multi-probe query side — every vector joins as a QUERY from its
-    two nearest cells (probe rank <= 2) against CANDIDATES in their
-    single home cell (probe rank = 1)."""
-    try:
-        import duckdb
-        import numpy as np
-
-        from tmdb_index_spark.operators.similarity import fit_kmeans_array
-
-        con = duckdb.connect()
-        path = f"{sf_dir}/embeddings.parquet"
-        n = con.sql(f"SELECT COUNT(*) FROM '{path}'").fetchone()[0]
-        if not n:
-            return None
-        sample = con.sql(
-            f"SELECT embedding FROM '{path}' ORDER BY vec_id LIMIT 10000"
-        ).fetchall()
-        X = np.array([list(r[0]) for r in sample], dtype="float64")
-        cells = max(1, round(n ** 0.5))
-        cents = fit_kmeans_array(X, cells)
-    except Exception:  # noqa: BLE001 — missing table → rows-only row
-        return None
-    dim = X.shape[1]
-    values = ",\n    ".join(
-        "({}, [{}])".format(
-            cid, ", ".join(repr(float(x)) for x in vec)
-        )
-        for cid, vec in cents
-    )
-    return f"""
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-cent AS (SELECT * FROM (VALUES
-    {values}
-) AS t(cell, cv)),
-d AS (
-  SELECT vec_id, v, cell,
-         list_sum(list_transform(generate_series(1, {dim}),
-           i -> (v[i] - cv[i]) * (v[i] - cv[i]))) AS dist
-  FROM v CROSS JOIN cent
-),
-ranked AS (
-  SELECT vec_id, v, cell,
-         ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY dist ASC, cell ASC) AS cr
-  FROM d
-),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {_COS_SQL} AS cos_sim
-  FROM (SELECT * FROM ranked WHERE cr <= 2) q
-  JOIN (SELECT * FROM ranked WHERE cr = 1) c ON q.cell = c.cell
-  WHERE q.vec_id <> c.vec_id
-)
-SELECT query_id, neighbor_id, cos_sim, rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id ASC)::BIGINT AS rank
-  FROM scored
-) WHERE rank <= 3
-"""
+    flat IVF oracle with each query probing its two nearest cells."""
+    return _flat_ivf_oracle_sql(sf_dir, nprobe=2)
 
 
 _IVF_MULTIPROBE_SQL = (
@@ -1402,81 +1256,19 @@ def semantic_dedup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _fitted_semantic_dedup_oracle_sql(
     sf_dir: str = "/root/testdata/sf0.01",
 ) -> str | None:
-    """Value-row oracle for ``semantic_dedup_flags``: reproduce the
-    deterministic centroid fit outside Spark (same parquet sample,
-    same numpy core, same seed — the :func:`_fitted_ivf_oracle_sql`
-    recipe), then express assignment (argmin with the (dist, cell)
-    tie-break), within-cell pair scoring (ROUND(cos, 4) ≥ t), and the
-    smaller-id drop election in plain SQL."""
-    try:
-        import duckdb
-        import numpy as np
-
-        from tmdb_index_spark.operators.similarity import (
-            fit_kmeans_array,
-            semantic_cells,
-        )
-
-        con = duckdb.connect()
-        path = f"{sf_dir}/embeddings.parquet"
-        n = con.sql(f"SELECT COUNT(*) FROM '{path}'").fetchone()[0]
-        if not n:
-            return None
-        # regime guard: the oracle below reproduces the FLAT k-means
-        # cell regime only; semantic_assign routes to two-level IVF
-        # (cells > SEMANTIC_TWO_LEVEL_CELLS) or sign-bit LSH orthants
-        # (cells > the 10k fit cap) at larger corpora, where this SQL
-        # would diverge from the engine — emit a rows-only row instead
-        # of a mismatching oracle
-        from tmdb_index_spark.operators.similarity import (
-            SEMANTIC_TWO_LEVEL_CELLS,
-        )
-
-        cells = semantic_cells(n)
-        if cells > SEMANTIC_TWO_LEVEL_CELLS or cells > 10_000:
-            return None
-        sample = con.sql(
-            f"SELECT embedding FROM '{path}' ORDER BY vec_id LIMIT 10000"
-        ).fetchall()
-        X = np.array([list(r[0]) for r in sample], dtype="float64")
-        # occupancy-constant cells — MUST stay the operator's own
-        # semantic_cells rule (round 10: flipped from √N)
-        cents = fit_kmeans_array(X, cells)
-    except Exception:  # noqa: BLE001 — missing table → rows-only row
+    """Value-row oracle for ``semantic_dedup_flags``: the engine's
+    ``semantic_cells`` k-means fit re-run on its parquet sample,
+    centroids as literals, then assignment, within-cell ROUND(cos, 4)
+    scoring and the smaller-id drop election in SQL."""
+    fit = _oracle_fit(sf_dir, _semantic_flat_cells)
+    if fit is None:
         return None
-    dim = X.shape[1]
-    values = ",\n    ".join(
-        "({}, [{}])".format(
-            cid, ", ".join(repr(float(x)) for x in vec)
-        )
-        for cid, vec in cents
-    )
+    dim, cents, _ = fit
     return f"""
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-cent AS (SELECT * FROM (VALUES
-    {values}
-) AS t(cell, cv)),
-d AS (
-  SELECT vec_id, v, cell,
-         list_sum(list_transform(generate_series(1, {dim}),
-           i -> (v[i] - cv[i]) * (v[i] - cv[i]))) AS dist
-  FROM v CROSS JOIN cent
-),
-assigned AS (
-  SELECT vec_id, v, CAST(cell AS BIGINT) AS cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY dist ASC, cell ASC) AS rn
-    FROM d
-  ) WHERE rn = 1
-),
-dropped AS (
-  SELECT DISTINCT b.vec_id
-  FROM assigned a JOIN assigned b
-    ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE ROUND(list_sum(list_transform(generate_series(1, {dim}), i -> a.v[i] * b.v[i])) /
-        (sqrt(list_sum(list_transform(a.v, x -> x * x))) *
-         sqrt(list_sum(list_transform(b.v, x -> x * x)))), 4) >= 0.4
-)
+{_V_CTE},
+{_values_cte("cent", "cell, cv", cents)},
+{_assign_sql(dim)},
+{_SEMDEDUP_DROPPED_SQL}
 SELECT vec_id, cell, (vec_id NOT IN (SELECT vec_id FROM dropped)) AS keep
 FROM assigned
 """
@@ -1508,129 +1300,23 @@ def semantic_pq_dedup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _fitted_semantic_pq_oracle_sql(
     sf_dir: str = "/root/testdata/sf0.01",
 ) -> str | None:
-    """Value-row oracle for ``semantic_pq_dedup_flags``: reproduce the
-    centroid AND per-subspace codebook fits outside Spark (same
-    parquet sample, same numpy cores, same seeds — the
-    :func:`_fitted_pq_oracle_sql` recipe), embed both as literals,
-    and express assignment, per-subspace code argmin (the
-    (dist, code) tie-break), and the SDC election — pairwise
-    sub-dots come from a codebook×codebook join so every similarity
-    is m lookups, exactly the engine's shape — in plain SQL."""
-    m, ks, threshold = 8, 16, 0.4
-    try:
-        import duckdb
-        import numpy as np
-
-        from tmdb_index_spark.operators.similarity import (
-            fit_kmeans_array,
-            fit_pq_array,
-            semantic_cells,
-        )
-
-        con = duckdb.connect()
-        path = f"{sf_dir}/embeddings.parquet"
-        n = con.sql(f"SELECT COUNT(*) FROM '{path}'").fetchone()[0]
-        if not n:
-            return None
-        # regime guard (mirrors _fitted_semantic_dedup_oracle_sql):
-        # this SQL reproduces the FLAT cell regime only — in the
-        # two-level-IVF or LSH-orthant regimes the engine's assignment
-        # differs, so emit a rows-only row rather than a wrong oracle
-        from tmdb_index_spark.operators.similarity import (
-            SEMANTIC_TWO_LEVEL_CELLS,
-        )
-
-        cells = semantic_cells(n)
-        if cells > SEMANTIC_TWO_LEVEL_CELLS or cells > 10_000:
-            return None
-        sample = con.sql(
-            f"SELECT embedding FROM '{path}' ORDER BY vec_id LIMIT 10000"
-        ).fetchall()
-        X = np.array([list(r[0]) for r in sample], dtype="float64")
-        # occupancy-constant cells — the operator's own semantic_cells
-        # rule, shared so the engines cannot disagree on the fit's k
-        cents = fit_kmeans_array(X, cells)
-        books = fit_pq_array(X, m=m, ks=ks)
-    except Exception:  # noqa: BLE001 — missing table → rows-only row
+    """Value-row oracle for ``semantic_pq_dedup_flags``: the semantic
+    dedup oracle with the 8 × 16 PQ codebooks fit on the same sample,
+    PQ encoding, and the smaller-id election scored by SDC cosine."""
+    fit = _oracle_fit(sf_dir, _semantic_flat_cells, pq=True)
+    if fit is None:
         return None
-    dim = X.shape[1]
-    sub = dim // m
-    cent_values = ",\n    ".join(
-        "({}, [{}])".format(cid, ", ".join(repr(float(x)) for x in vec))
-        for cid, vec in cents
-    )
-    cb_values = ",\n    ".join(
-        "({}, {}, [{}])".format(
-            j, code, ", ".join(repr(float(x)) for x in vec)
-        )
-        for j, book in enumerate(books)
-        for code, vec in book
-    )
+    dim, cents, books = fit
+    sub = dim // 8
     return f"""
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-cent AS (SELECT * FROM (VALUES
-    {cent_values}
-) AS t(cell, cv)),
-d AS (
-  SELECT vec_id, v, cell,
-         list_sum(list_transform(generate_series(1, {dim}),
-           i -> (v[i] - cv[i]) * (v[i] - cv[i]))) AS dist
-  FROM v CROSS JOIN cent
-),
-assigned AS (
-  SELECT vec_id, v, CAST(cell AS BIGINT) AS cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY dist ASC, cell ASC) AS rn
-    FROM d
-  ) WHERE rn = 1
-),
-cb AS (SELECT * FROM (VALUES
-    {cb_values}
-) AS t(sub, code, cbv)),
-cdist AS (
-  SELECT a.vec_id, cb.sub, cb.code,
-         list_sum(list_transform(generate_series(1, {sub}),
-           i -> (a.v[cb.sub * {sub} + i] - cb.cbv[i])
-              * (a.v[cb.sub * {sub} + i] - cb.cbv[i]))) AS dist
-  FROM assigned a CROSS JOIN cb
-),
-codes AS (
-  SELECT vec_id, sub, code FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-                                 ORDER BY dist ASC, code ASC) AS rn
-    FROM cdist
-  ) WHERE rn = 1
-),
-pd AS (
-  SELECT a.sub, a.code AS ca, b.code AS cb2,
-         list_sum(list_transform(generate_series(1, {sub}),
-           i -> a.cbv[i] * b.cbv[i])) AS dot
-  FROM cb a JOIN cb b ON a.sub = b.sub
-),
-cbn AS (SELECT sub, code,
-               list_sum(list_transform(cbv, x -> x * x)) AS n2 FROM cb),
-nrm AS (
-  SELECT c.vec_id, SQRT(SUM(n.n2)) AS nrm
-  FROM codes c JOIN cbn n ON n.sub = c.sub AND n.code = c.code
-  GROUP BY 1
-),
-adot AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b, SUM(p.dot) AS adot
-  FROM assigned a
-  JOIN assigned b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  JOIN codes ca ON ca.vec_id = a.vec_id
-  JOIN codes cb2 ON cb2.vec_id = b.vec_id AND cb2.sub = ca.sub
-  JOIN pd p ON p.sub = ca.sub AND p.ca = ca.code AND p.cb2 = cb2.code
-  GROUP BY 1, 2
-),
-dropped AS (
-  SELECT DISTINCT d.id_b AS vec_id
-  FROM adot d
-  JOIN nrm na ON na.vec_id = d.id_a
-  JOIN nrm nb ON nb.vec_id = d.id_b
-  WHERE ROUND(d.adot / (na.nrm * nb.nrm), 4) >= {threshold}
-)
-SELECT vec_id, cell, (vec_id NOT IN (SELECT vec_id FROM dropped)) AS keep
+{_V_CTE},
+{_values_cte("cent", "cell, cv", cents)},
+{_assign_sql(dim)},
+{_codebook_sql(books)},
+{_pq_encode_sql(sub)},
+{_sdc_pairs_sql(sub, "assigned", "assigned", " AND a.vec_id < b.vec_id", 0.4)}
+SELECT vec_id, cell,
+       (vec_id NOT IN (SELECT id_b FROM sdc_pairs)) AS keep
 FROM assigned
 """
 
@@ -1684,34 +1370,20 @@ def embedding_pca_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _fitted_pca_oracle_sql(
     sf_dir: str = "/root/testdata/sf0.01",
 ) -> str | None:
-    """Value-row oracle for ``embedding_pca_labels``: re-run the
-    deterministic PCA fit OUTSIDE Spark (duckdb read of the same
-    first-``max_sample``-by-id parquet sample + the shared
-    :func:`fit_pca_array` numpy core), then emit the projection as the
-    SAME unrolled expression string (``pca_projection_sql``,
-    ``one_based=True`` for DuckDB's list indexing) with the fitted
-    mean/components as literals. Returns None when the table is
-    unreadable (rows-only fallback)."""
-    try:
-        import duckdb
-        import numpy as np
+    """Value-row oracle for ``embedding_pca_labels``: the engine's PCA
+    fit (:func:`fit_pca_array`) re-run on its parquet sample, and the
+    projection as the SAME unrolled expression string
+    (``pca_projection_sql``, ``one_based=True`` for DuckDB's list
+    indexing) with the fitted mean/components as literals."""
+    from tmdb_index_spark.operators.similarity import (
+        fit_pca_array,
+        pca_projection_sql,
+    )
 
-        from tmdb_index_spark.operators.similarity import (
-            fit_pca_array,
-            pca_projection_sql,
-        )
-
-        con = duckdb.connect()
-        path = f"{sf_dir}/embeddings.parquet"
-        sample = con.sql(
-            f"SELECT embedding FROM '{path}' ORDER BY vec_id LIMIT 10000"
-        ).fetchall()
-        if not sample:
-            return None
-        X = np.array([list(r[0]) for r in sample], dtype="float64")
-        mu, comps, evr = fit_pca_array(X, 2)
-    except Exception:  # noqa: BLE001 — missing table → rows-only row
+    sample = _oracle_sample(sf_dir)
+    if sample is None:
         return None
+    mu, comps, evr = fit_pca_array(sample[1], 2)
     p1 = pca_projection_sql(mu.tolist(), comps[0].tolist(), "embedding", True)
     p2 = pca_projection_sql(mu.tolist(), comps[1].tolist(), "embedding", True)
     return f"""
@@ -1756,94 +1428,25 @@ def embedding_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _fitted_pq_oracle_sql(
     sf_dir: str = "/root/testdata/sf0.01",
 ) -> str | None:
-    """Value-row oracle for ``embedding_pq_topk``: reproduce BOTH
-    deterministic fits OUTSIDE Spark (duckdb read of the same
-    first-10000-by-id parquet sample; :func:`fit_kmeans_array` for the
-    IVF centroids, :func:`fit_pq_array` for the per-subspace
-    codebooks — identical seeds), embed centroid + codebook tables as
-    literals, and express cell assignment, PQ encoding (per-subspace
-    argmin with the (dist, code) tie-break) and ADC scoring in plain
-    SQL. Returns None when the table is unreadable (rows-only
-    fallback)."""
-    m, ks, k = 8, 16, 3
-    try:
-        import duckdb
-        import numpy as np
+    """Value-row oracle for ``embedding_pq_topk``: the flat IVF fit
+    plus the 8 × 16 PQ codebooks re-run on the engine's parquet sample,
+    both as literals; assignment, PQ encoding and ADC top-3 (exact
+    query side, decoded candidate side) in SQL."""
+    return _ivfpq_oracle_sql(sf_dir, nprobe=1)
 
-        from tmdb_index_spark.operators.similarity import (
-            fit_kmeans_array,
-            fit_pq_array,
-        )
 
-        con = duckdb.connect()
-        path = f"{sf_dir}/embeddings.parquet"
-        n = con.sql(f"SELECT COUNT(*) FROM '{path}'").fetchone()[0]
-        if not n:
-            return None
-        sample = con.sql(
-            f"SELECT embedding FROM '{path}' ORDER BY vec_id LIMIT 10000"
-        ).fetchall()
-        X = np.array([list(r[0]) for r in sample], dtype="float64")
-        cells = max(1, round(n ** 0.5))
-        cents = fit_kmeans_array(X, cells)
-        books = fit_pq_array(X, m=m, ks=ks)
-    except Exception:  # noqa: BLE001 — missing table → rows-only row
+def _ivfpq_oracle_sql(sf_dir: str, nprobe: int) -> str | None:
+    fit = _oracle_fit(sf_dir, _flat_cells, pq=True)
+    if fit is None:
         return None
-    dim = X.shape[1]
-    sub = dim // m
-    cent_values = ",\n    ".join(
-        "({}, [{}])".format(cid, ", ".join(repr(float(x)) for x in vec))
-        for cid, vec in cents
-    )
-    cb_values = ",\n    ".join(
-        "({}, {}, [{}])".format(
-            j, code, ", ".join(repr(float(x)) for x in vec)
-        )
-        for j, book in enumerate(books)
-        for code, vec in book
-    )
+    dim, cents, books = fit
+    sub = dim // 8
     return f"""
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-cent AS (SELECT * FROM (VALUES
-    {cent_values}
-) AS t(cell, cv)),
-d AS (
-  SELECT vec_id, v, cell,
-         list_sum(list_transform(generate_series(1, {dim}),
-           i -> (v[i] - cv[i]) * (v[i] - cv[i]))) AS dist
-  FROM v CROSS JOIN cent
-),
-assigned AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY dist ASC, cell ASC) AS rn
-    FROM d
-  ) WHERE rn = 1
-),
-cb AS (SELECT * FROM (VALUES
-    {cb_values}
-) AS t(sub, code, cbv)),
-cdist AS (
-  SELECT a.vec_id, cb.sub, cb.code,
-         list_sum(list_transform(generate_series(1, {sub}),
-           i -> (a.v[cb.sub * {sub} + i] - cb.cbv[i])
-              * (a.v[cb.sub * {sub} + i] - cb.cbv[i]))) AS dist
-  FROM assigned a CROSS JOIN cb
-),
-codes AS (
-  SELECT vec_id, sub, code FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-                                 ORDER BY dist ASC, code ASC) AS rn
-    FROM cdist
-  ) WHERE rn = 1
-),
-cbn AS (SELECT sub, code,
-               list_sum(list_transform(cbv, x -> x * x)) AS n2 FROM cb),
-cnorm AS (
-  SELECT c.vec_id, SQRT(SUM(n.n2)) AS cnorm
-  FROM codes c JOIN cbn n ON n.sub = c.sub AND n.code = c.code
-  GROUP BY 1
-),
+{_V_CTE},
+{_values_cte("cent", "cell, cv", cents)},
+{_assign_sql(dim)},
+{_codebook_sql(books)},
+{_pq_encode_sql(sub)},
 qn AS (SELECT vec_id,
               SQRT(list_sum(list_transform(v, x -> x * x))) AS qnorm
        FROM assigned),
@@ -1851,26 +1454,22 @@ dots AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          SUM(list_sum(list_transform(generate_series(1, {sub}),
            i -> q.v[cd.sub * {sub} + i] * cb.cbv[i]))) AS adot
-  FROM assigned q
+  FROM assigned_ranked q
   JOIN assigned c ON q.cell = c.cell AND q.vec_id <> c.vec_id
-  JOIN codes cd ON cd.vec_id = c.vec_id
+  JOIN assigned_codes cd ON cd.vec_id = c.vec_id
   JOIN cb ON cb.sub = cd.sub AND cb.code = cd.code
+  WHERE q.rn <= {nprobe}
   GROUP BY 1, 2
 ),
 scored AS (
   SELECT d.query_id, d.neighbor_id,
-         ROUND(d.adot / (q.qnorm * n.cnorm), 4) AS adc_sim
+         ROUND(d.adot / (q.qnorm * n.nrm), 4) AS adc_sim
   FROM dots d
   JOIN qn q ON q.vec_id = d.query_id
-  JOIN cnorm n ON n.vec_id = d.neighbor_id
-  WHERE q.qnorm > 0 AND n.cnorm > 0
+  JOIN assigned_norm n ON n.vec_id = d.neighbor_id
+  WHERE q.qnorm > 0 AND n.nrm > 0
 )
-SELECT query_id, neighbor_id, adc_sim, rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY adc_sim DESC, neighbor_id ASC)::BIGINT AS rank
-  FROM scored
-) WHERE rank <= {k}
-"""
+{_top3_sql("adc_sim")}"""
 
 
 def embedding_pq_multiprobe_tuned(
@@ -1898,118 +1497,8 @@ def _fitted_pq_multiprobe_oracle_sql(
     sf_dir: str = "/root/testdata/sf0.01",
 ) -> str | None:
     """Value-row oracle for ``embedding_pq_multiprobe_tuned``: the
-    :func:`_fitted_pq_oracle_sql` recipe (both fits re-run from the
-    same parquet sample, centroid + codebook literals, SQL cell
-    assignment / PQ encoding / ADC scoring) with the multi-probe query
-    side — every vector joins as a QUERY from its two nearest cells
-    (probe rank <= 2) against code-word CANDIDATES in their single
-    home cell (rank 1)."""
-    m, ks, k, nprobe = 8, 16, 3, 2
-    try:
-        import duckdb
-        import numpy as np
-
-        from tmdb_index_spark.operators.similarity import (
-            fit_kmeans_array,
-            fit_pq_array,
-        )
-
-        con = duckdb.connect()
-        path = f"{sf_dir}/embeddings.parquet"
-        n = con.sql(f"SELECT COUNT(*) FROM '{path}'").fetchone()[0]
-        if not n:
-            return None
-        sample = con.sql(
-            f"SELECT embedding FROM '{path}' ORDER BY vec_id LIMIT 10000"
-        ).fetchall()
-        X = np.array([list(r[0]) for r in sample], dtype="float64")
-        cells = max(1, round(n ** 0.5))
-        cents = fit_kmeans_array(X, cells)
-        books = fit_pq_array(X, m=m, ks=ks)
-    except Exception:  # noqa: BLE001 — missing table → rows-only row
-        return None
-    dim = X.shape[1]
-    sub = dim // m
-    cent_values = ",\n    ".join(
-        "({}, [{}])".format(cid, ", ".join(repr(float(x)) for x in vec))
-        for cid, vec in cents
-    )
-    cb_values = ",\n    ".join(
-        "({}, {}, [{}])".format(
-            j, code, ", ".join(repr(float(x)) for x in vec)
-        )
-        for j, book in enumerate(books)
-        for code, vec in book
-    )
-    return f"""
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-cent AS (SELECT * FROM (VALUES
-    {cent_values}
-) AS t(cell, cv)),
-d AS (
-  SELECT vec_id, v, cell,
-         list_sum(list_transform(generate_series(1, {dim}),
-           i -> (v[i] - cv[i]) * (v[i] - cv[i]))) AS dist
-  FROM v CROSS JOIN cent
-),
-ranked AS (
-  SELECT vec_id, v, cell,
-         ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY dist ASC, cell ASC) AS rn
-  FROM d
-),
-assigned AS (SELECT vec_id, v, cell FROM ranked WHERE rn = 1),
-cb AS (SELECT * FROM (VALUES
-    {cb_values}
-) AS t(sub, code, cbv)),
-cdist AS (
-  SELECT a.vec_id, cb.sub, cb.code,
-         list_sum(list_transform(generate_series(1, {sub}),
-           i -> (a.v[cb.sub * {sub} + i] - cb.cbv[i])
-              * (a.v[cb.sub * {sub} + i] - cb.cbv[i]))) AS dist
-  FROM assigned a CROSS JOIN cb
-),
-codes AS (
-  SELECT vec_id, sub, code FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-                                 ORDER BY dist ASC, code ASC) AS rn
-    FROM cdist
-  ) WHERE rn = 1
-),
-cbn AS (SELECT sub, code,
-               list_sum(list_transform(cbv, x -> x * x)) AS n2 FROM cb),
-cnorm AS (
-  SELECT c.vec_id, SQRT(SUM(n.n2)) AS cnorm
-  FROM codes c JOIN cbn n ON n.sub = c.sub AND n.code = c.code
-  GROUP BY 1
-),
-qn AS (SELECT vec_id,
-              SQRT(list_sum(list_transform(v, x -> x * x))) AS qnorm
-       FROM assigned),
-dots AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         SUM(list_sum(list_transform(generate_series(1, {sub}),
-           i -> q.v[cd.sub * {sub} + i] * cb.cbv[i]))) AS adot
-  FROM (SELECT * FROM ranked WHERE rn <= {nprobe}) q
-  JOIN assigned c ON q.cell = c.cell AND q.vec_id <> c.vec_id
-  JOIN codes cd ON cd.vec_id = c.vec_id
-  JOIN cb ON cb.sub = cd.sub AND cb.code = cd.code
-  GROUP BY 1, 2
-),
-scored AS (
-  SELECT d.query_id, d.neighbor_id,
-         ROUND(d.adot / (q.qnorm * n.cnorm), 4) AS adc_sim
-  FROM dots d
-  JOIN qn q ON q.vec_id = d.query_id
-  JOIN cnorm n ON n.vec_id = d.neighbor_id
-  WHERE q.qnorm > 0 AND n.cnorm > 0
-)
-SELECT query_id, neighbor_id, adc_sim, rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY adc_sim DESC, neighbor_id ASC)::BIGINT AS rank
-  FROM scored
-) WHERE rank <= {k}
-"""
+    IVF-PQ oracle with each query probing its two nearest cells."""
+    return _ivfpq_oracle_sql(sf_dir, nprobe=2)
 
 
 def ann_recall_eval_multiprobe(
@@ -2100,38 +1589,38 @@ def ann_recall_eval_multiprobe(
 def _ann_recall_multiprobe_oracle_sql(
     sf_dir: str = "/root/testdata/sf0.01",
 ) -> str | None:
-    """Value-row oracle for ``ann_recall_eval_multiprobe``: exact
-    top-3 over the sampled queries plus the THREE fitted-literal
-    multi-probe oracles embedded verbatim as subqueries (CTEs are
-    legal inside DuckDB subqueries and scoped per subquery, so each
-    index pipeline keeps its own ``v``/``cent``/... names); recall
-    joins each approx set to the exact set.  Returns None when any
-    component builder degrades (missing table / non-flat regime) —
-    the whole eval then falls back to rows-only, never to a partially
-    mirrored oracle."""
-    flat = _fitted_ivf_multiprobe_oracle_sql(sf_dir)
-    two = _fitted_ivf2_multiprobe_oracle_sql(sf_dir)
-    pq = _fitted_pq_multiprobe_oracle_sql(sf_dir)
-    if not (flat and two and pq):
+    """Value-row oracle for ``ann_recall_eval_multiprobe``: the three
+    fitted-literal multi-probe oracles as recall legs."""
+    return _recall_sql(
+        [
+            ("ivf_multiprobe", _fitted_ivf_multiprobe_oracle_sql(sf_dir)),
+            ("ivf2_multiprobe", _fitted_ivf2_multiprobe_oracle_sql(sf_dir)),
+            ("pq_multiprobe", _fitted_pq_multiprobe_oracle_sql(sf_dir)),
+        ]
+    )
+
+
+def _recall_sql(legs: list[tuple[str, str | None]]) -> str | None:
+    """Recall@3 of each ``(index_name, top-k SQL)`` leg against exact
+    cosine top-3 on the bounded query sample (``vec_id % 50 = 0 AND
+    vec_id < 100000``).  Each leg runs as a subquery, so its CTE names
+    are scoped to it; restricting the query side to the sample after
+    ranking equals ranking the sample alone, as per-query results are
+    independent.  None when any leg has no SQL: a partially mirrored
+    eval is never emitted."""
+    if not all(sql for _, sql in legs):
         return None
-    legs = ", ".join(
-        f"""
-hits_{name} AS (
-  SELECT '{name}' AS index_name, COUNT(*) AS n_hits
+    hits = "\n  UNION ALL ".join(
+        f"""SELECT '{name}' AS index_name, COUNT(*) AS n_hits
   FROM (
     SELECT query_id, neighbor_id FROM ({sql}) __a
     WHERE query_id % 50 = 0 AND query_id < 100000
   ) __f
-  JOIN exact e USING (query_id, neighbor_id)
-)"""
-        for name, sql in [
-            ("ivf_multiprobe", flat),
-            ("ivf2_multiprobe", two),
-            ("pq_multiprobe", pq),
-        ]
+  JOIN exact e USING (query_id, neighbor_id)"""
+        for name, sql in legs
     )
     return f"""
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+{_V_CTE},
 qs AS (SELECT * FROM v WHERE vec_id % 50 = 0 AND vec_id < 100000),
 nq AS (SELECT COUNT(*) AS n_queries FROM qs),
 exact AS (
@@ -2141,15 +1630,14 @@ exact AS (
                               ORDER BY {_COS_SQL} DESC, c.vec_id ASC) AS rn
     FROM qs q CROSS JOIN v c WHERE q.vec_id <> c.vec_id
   ) WHERE rn <= 3
-), {legs}
+),
+hits AS (
+  {hits}
+)
 SELECT index_name, CAST(n_queries AS BIGINT) AS n_queries,
        CAST(n_hits AS BIGINT) AS n_hits,
        ROUND(n_hits / (3.0 * n_queries), 6) AS recall_at_3
-FROM (
-  SELECT * FROM hits_ivf_multiprobe
-  UNION ALL SELECT * FROM hits_ivf2_multiprobe
-  UNION ALL SELECT * FROM hits_pq_multiprobe
-) h CROSS JOIN nq
+FROM hits CROSS JOIN nq
 """
 
 
@@ -2295,28 +1783,17 @@ def _ann_index_advisor_oracle_sql(
     rec_sql = _ann_recall_multiprobe_oracle_sql(sf_dir)
     if rec_sql is None:
         return None
-    try:
-        import duckdb
-
-        con = duckdb.connect()
-        path = f"{sf_dir}/embeddings.parquet"
-        n, dim = con.sql(
-            f"SELECT COUNT(*), MAX(len(embedding)) FROM '{path}'"
-        ).fetchone()
-        n, dim = int(n or 0), int(dim or 0)
-    except Exception:  # noqa: BLE001 — missing table → rows-only
-        return None
-    values = ",\n    ".join(
-        f"('{name}', {cells}, {cand}, {by})"
-        for name, cells, cand, by in _ann_advisor_cost_rows(n, dim)
+    n, X = _oracle_sample(sf_dir)
+    cost = _values_cte(
+        "cost",
+        "index_name, cells, est_candidates_per_query,"
+        " est_candidate_bytes_per_query",
+        _ann_advisor_cost_rows(n, X.shape[1]),
     )
     t = ANN_ADVISOR_TARGET_RECALL
     return f"""
 WITH rec AS ({rec_sql}),
-cost AS (SELECT * FROM (VALUES
-    {values}
-) AS t(index_name, cells, est_candidates_per_query,
-       est_candidate_bytes_per_query)),
+{cost},
 j AS (
   SELECT r.index_name, r.n_queries, r.n_hits, r.recall_at_3,
          c.cells, c.est_candidates_per_query,
@@ -2402,110 +1879,15 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ann_recall_oracle_sql(
     sf_dir: str = "/root/testdata/sf0.01",
 ) -> str | None:
-    """Value-row oracle for ``ann_recall_eval``: exact top-3 over the
-    sampled queries, the LSH bit-rule buckets (static — a function of
-    COUNT(*)), and the IVF assignment over RE-FITTED centroid literals
-    (same numpy core, same parquet sample as
-    :func:`_fitted_ivf_oracle_sql`); recall joins each index's top-3
-    to the exact set. Restricting the query side to the sample before
-    ranking equals Spark's filter-after-ranking — per-query results
-    are independent. Returns None when the table is unreadable."""
-    try:
-        import duckdb
-        import numpy as np
-
-        from tmdb_index_spark.operators.similarity import fit_kmeans_array
-
-        con = duckdb.connect()
-        path = f"{sf_dir}/embeddings.parquet"
-        n = con.sql(f"SELECT COUNT(*) FROM '{path}'").fetchone()[0]
-        if not n:
-            return None
-        sample = con.sql(
-            f"SELECT embedding FROM '{path}' ORDER BY vec_id LIMIT 10000"
-        ).fetchall()
-        X = np.array([list(r[0]) for r in sample], dtype="float64")
-        cells = max(1, round(n ** 0.5))
-        cents = fit_kmeans_array(X, cells)
-    except Exception:  # noqa: BLE001 — missing table → rows-only row
-        return None
-    dim = X.shape[1]
-    cent_values = ",\n    ".join(
-        "({}, [{}])".format(cid, ", ".join(repr(float(x)) for x in vec))
-        for cid, vec in cents
+    """Value-row oracle for ``ann_recall_eval``: the fitted IVF oracle
+    and the static LSH-tuned oracle (its bit rule is a function of
+    COUNT(*)) as recall legs."""
+    return _recall_sql(
+        [
+            ("ivf_tuned", _fitted_ivf_oracle_sql(sf_dir)),
+            ("lsh_tuned", _EMB_LSH_TUNED_SQL),
+        ]
     )
-    return f"""
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-qs AS (SELECT * FROM v WHERE vec_id % 50 = 0 AND vec_id < 100000),
-nq AS (SELECT COUNT(*) AS n_queries FROM qs),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                              ORDER BY {_COS_SQL} DESC, c.vec_id ASC) AS rn
-    FROM qs q CROSS JOIN v c WHERE q.vec_id <> c.vec_id
-  ) WHERE rn <= 3
-),
-p AS (
-  SELECT LEAST(GREATEST(1, CAST(CEIL(LOG2(GREATEST(COUNT(*), 2) / 32.0)) AS BIGINT)), {dim}) AS nb
-  FROM embeddings
-),
-lshv AS (
-  SELECT vec_id, v,
-         list_sum(list_transform(generate_series(0, (SELECT nb FROM p) - 1),
-           i -> CASE WHEN v[i+1] >= 0 THEN (1::BIGINT << i) ELSE 0::BIGINT END)) AS bucket
-  FROM v
-),
-lsh AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                              ORDER BY {_COS_SQL} DESC, c.vec_id ASC) AS rn
-    FROM (SELECT * FROM lshv WHERE vec_id % 50 = 0 AND vec_id < 100000) q
-    JOIN lshv c ON q.bucket = c.bucket
-    WHERE q.vec_id <> c.vec_id
-  ) WHERE rn <= 3
-),
-cent AS (SELECT * FROM (VALUES
-    {cent_values}
-) AS t(cell, cv)),
-d AS (
-  SELECT vec_id, v, cell,
-         list_sum(list_transform(generate_series(1, {dim}),
-           i -> (v[i] - cv[i]) * (v[i] - cv[i]))) AS dist
-  FROM v CROSS JOIN cent
-),
-assigned AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY dist ASC, cell ASC) AS rn
-    FROM d
-  ) WHERE rn = 1
-),
-ivf AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                              ORDER BY {_COS_SQL} DESC, c.vec_id ASC) AS rn
-    FROM (SELECT * FROM assigned WHERE vec_id % 50 = 0 AND vec_id < 100000) q
-    JOIN assigned c ON q.cell = c.cell
-    WHERE q.vec_id <> c.vec_id
-  ) WHERE rn <= 3
-),
-ivf_hits AS (SELECT COUNT(*) AS n_hits
-             FROM ivf JOIN exact USING (query_id, neighbor_id)),
-lsh_hits AS (SELECT COUNT(*) AS n_hits
-             FROM lsh JOIN exact USING (query_id, neighbor_id))
-SELECT 'ivf_tuned' AS index_name,
-       nq.n_queries::BIGINT AS n_queries,
-       ivf_hits.n_hits::BIGINT AS n_hits,
-       ROUND(ivf_hits.n_hits / (3.0 * nq.n_queries), 6) AS recall_at_3
-FROM ivf_hits, nq
-UNION ALL
-SELECT 'lsh_tuned', nq.n_queries::BIGINT, lsh_hits.n_hits::BIGINT,
-       ROUND(lsh_hits.n_hits / (3.0 * nq.n_queries), 6)
-FROM lsh_hits, nq
-"""
 
 
 _STATIONARY_ITERS = 16

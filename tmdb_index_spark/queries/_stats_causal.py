@@ -23,7 +23,11 @@ from tmdb_index_spark.queries._embed_dedup import (  # noqa: E501
     _COS_SQL,
     _DUCK_SHINGLES,
     _EN_MARKERS_SQL,
+    _SEMDEDUP_DROPPED_SQL,
+    _assign_sql,
     _minhash_expr,
+    _oracle_fit,
+    _values_cte,
 )
 
 _ATTR_CHANNELS = ("click", "view", "signup", "error")
@@ -1478,46 +1482,22 @@ def corpus_pipeline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _fitted_corpus_pipeline_oracle_sql(
     sf_dir: str = "/root/testdata/sf0.01",
 ) -> str | None:
-    """Value-row oracle for ``corpus_pipeline_stats``: re-run the
-    deterministic centroid fit outside Spark (same parquet sample,
-    same numpy core — the :func:`_fitted_semantic_dedup_oracle_sql`
-    recipe, cells fit on the FULL embeddings table), then express all
-    eight stages as chained CTEs mirroring each certified stage
-    oracle: the adaptive-quality recipe (`_ADAPTIVE_QUALITY_SQL`),
+    """Value-row oracle for ``corpus_pipeline_stats``: the SemDeDup
+    ``semantic_cells`` k-means fit re-run on the FULL embeddings
+    table's parquet sample, then all eight stages as chained CTEs
+    mirroring each certified stage oracle: the adaptive-quality recipe (`_ADAPTIVE_QUALITY_SQL`),
     the corpus-clean minhash blocks (`_corpus_clean_sql`), the
     SemDeDup election, the decontam 5-grams (`_DECONTAM_SQL`), the
     water-fill closed form (`_WATERFILL_SQL`) + ppm hash-rate sample,
     and the pack binning (`_PACK_SEQUENCES_SQL`)."""
-    try:
-        import duckdb
-        import numpy as np
+    from tmdb_index_spark.operators.similarity import semantic_cells
 
-        from tmdb_index_spark.operators.similarity import (
-            fit_kmeans_array,
-            semantic_cells,
-        )
-
-        con = duckdb.connect()
-        path = f"{sf_dir}/embeddings.parquet"
-        n = con.sql(f"SELECT COUNT(*) FROM '{path}'").fetchone()[0]
-        if not n:
-            return None
-        sample = con.sql(
-            f"SELECT embedding FROM '{path}' ORDER BY vec_id LIMIT 10000"
-        ).fetchall()
-        X = np.array([list(r[0]) for r in sample], dtype="float64")
-        # occupancy-constant cells — MUST stay the operator's own
-        # semantic_cells rule (round 10: flipped from √N)
-        cents = fit_kmeans_array(X, semantic_cells(n))
-    except Exception:  # noqa: BLE001 — missing table → rows-only row
+    # occupancy-constant cells — MUST stay the operator's own
+    # semantic_cells rule (round 10: flipped from √N)
+    fit = _oracle_fit(sf_dir, semantic_cells)
+    if fit is None:
         return None
-    dim = X.shape[1]
-    values = ",\n    ".join(
-        "({}, [{}])".format(
-            cid, ", ".join(repr(float(x)) for x in vec)
-        )
-        for cid, vec in cents
-    )
+    dim, cents, _ = fit
     sig_cols = ", ".join(f"{_minhash_expr(i)} AS mh{i}" for i in range(16))
     tok_expr = (
         "len(regexp_extract_all(coalesce(text, ''),"
@@ -1603,32 +1583,11 @@ v AS (
   SELECT e.vec_id, e.embedding::DOUBLE[] AS v
   FROM embeddings e JOIN s4 ON e.vec_id = s4.doc_id
 ),
-cent AS (SELECT * FROM (VALUES
-    {values}
-) AS tc(cell, cv)),
-dd AS (
-  SELECT vec_id, v, cell,
-         list_sum(list_transform(generate_series(1, {dim}),
-           i -> (v[i] - cv[i]) * (v[i] - cv[i]))) AS dist
-  FROM v CROSS JOIN cent
-),
-assigned AS (
-  SELECT vec_id, v, CAST(cell AS BIGINT) AS cell FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY dist ASC, cell ASC) AS rn
-    FROM dd
-  ) WHERE rn = 1
-),
-semdrop AS (
-  SELECT DISTINCT b.vec_id
-  FROM assigned a JOIN assigned b
-    ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE ROUND(list_sum(list_transform(generate_series(1, {dim}), i -> a.v[i] * b.v[i])) /
-        (sqrt(list_sum(list_transform(a.v, x -> x * x))) *
-         sqrt(list_sum(list_transform(b.v, x -> x * x)))), 4) >= 0.4
-),
+{_values_cte("cent", "cell, cv", cents)},
+{_assign_sql(dim)},
+{_SEMDEDUP_DROPPED_SQL},
 s5 AS (
-  SELECT s4.* FROM s4 LEFT JOIN semdrop sd ON s4.doc_id = sd.vec_id
+  SELECT s4.* FROM s4 LEFT JOIN dropped sd ON s4.doc_id = sd.vec_id
   WHERE sd.vec_id IS NULL
 ),
 ng_ev AS (
